@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** Waits until every queued listener event has been delivered, so span
+  * counters are complete before they are read. The listener bus is
+  * package-private, hence this file's package.
+  */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
