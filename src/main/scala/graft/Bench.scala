@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Driver-run benchmark: times every declared query on
   * `SPARK_GRAFT_SF_DIR` and emits machine-readable JSON.
@@ -212,9 +213,9 @@ object Bench {
 
     def releaseArtifacts(): Unit = {
       try graft.queries.PipelineOps.releaseMemo(spark)
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
       try spark.catalog.clearCache()
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
     }
 
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"

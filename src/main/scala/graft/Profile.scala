@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Optimization-round measurement harness (guide §1: measure first).
   *
@@ -78,8 +79,8 @@ object Profile {
 
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      try graft.queries.PipelineOps.releaseMemo(spark) catch { case _: Throwable => }
-      try spark.catalog.clearCache() catch { case _: Throwable => }
+      try graft.queries.PipelineOps.releaseMemo(spark) catch { case NonFatal(_) => }
+      try spark.catalog.clearCache() catch { case NonFatal(_) => }
       // warm-up identical to Bench's family warm-up
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
 

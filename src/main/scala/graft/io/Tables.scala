@@ -18,33 +18,14 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Memoized per (session, path): `spark.read.parquet` re-lists files and
-    * re-reads footers on every call, which at fleet scale is what a
-    * catalog/metastore caches. The tables are read-only test fixtures, so
-    * reusing the resolved relation is safe, and repeated queries skip the
-    * listing + schema-inference cost.
+  /** Memoized per (session, path) in [[graft.util.SessionArtifacts]]:
+    * `spark.read.parquet` re-lists files and re-reads footers on every
+    * call, which at fleet scale is what a catalog/metastore caches. The
+    * tables are read-only test fixtures, so reusing the resolved relation
+    * is safe, and repeated queries skip the listing + schema-inference
+    * cost.
     */
-  // keyed on the SESSION OBJECT via WeakHashMap — identityHashCode is
-  // not unique (a collision would hand one session a DataFrame resolved
-  // against another, possibly stopped, session). NOTE the weak key does
-  // NOT buy automatic eviction: every cached DataFrame strongly
-  // references its SparkSession, and the map holds values strongly, so
-  // the key stays reachable (the WeakHashMap javadoc's
-  // value-references-key caveat — same honest contract as
-  // PipelineOps.sharedMemo). Fine for the one-session-per-JVM processes
-  // this engine runs in; a long-lived multi-session service must call
-  // [[releaseCache]] when it stops a session
-  // (PipelineOps.releaseMemo does so on the caller's behalf).
-  private val relationCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]())
-
-  /** Drop every resolved relation bound to `s` — the explicit eviction
-    * hook a multi-session service calls before stopping a session (the
-    * weak key alone cannot clear the entry; see the cache note).
-    */
-  def releaseCache(s: SparkSession): Unit =
-    relationCache.remove(s): Unit
+  private val Relation = new graft.util.SessionArtifacts.Kind[DataFrame]("relation")
 
   // ---- schema contract ------------------------------------------------
   // Checked once per loaded relation (round-8 lesson: a regenerated
@@ -128,11 +109,9 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     loadLock.synchronized {
-      relationCache
-        .computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty)
-        .getOrElseUpdate(s"$sfDir/$name.parquet",
-          requireSchema(name, s"$sfDir/$name.parquet",
-            spark.read.parquet(s"$sfDir/$name.parquet")))
+      graft.util.SessionArtifacts.get(spark, Relation, s"$sfDir/$name.parquet")(
+        requireSchema(name, s"$sfDir/$name.parquet",
+          spark.read.parquet(s"$sfDir/$name.parquet")))
     }
 
   def region(spark: SparkSession, d: String): DataFrame = load(spark, d, "region")

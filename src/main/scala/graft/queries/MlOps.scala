@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
 import graft.cluster.Clustering
 import graft.multimodal.Multimodal
+import graft.util.SessionArtifacts
+import graft.util.SessionArtifacts.Kind
 
 /** ML / clustering / multimodal declared queries. The clustering fits are
   * seeded and not SQL-expressible, so their declared results are the
@@ -113,15 +115,10 @@ object MlOps {
     * eigendecomposition; see [[graft.cluster.Pca]]).
     */
   private def pcaModel(s: SparkSession, d: String): graft.cluster.Pca.PcaModel =
-    graft.util.Once.memo(
-      pcaMemo.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap.empty),
-      d)(
-        graft.cluster.Pca.fit(Tables.embeddings(s, d), "embedding", k = 5))
+    SessionArtifacts.get(s, PcaM, d)(
+      graft.cluster.Pca.fit(Tables.embeddings(s, d), "embedding", k = 5))
 
-  private val pcaMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        graft.util.Once[graft.cluster.Pca.PcaModel]]]())
+  private val PcaM = new Kind[graft.cluster.Pca.PcaModel]("pca")
 
   /** Real PNG files on disk, staged once per (session, sfDir) from the
     * synthesizers' payloads for the every-10th document — what puts the
@@ -131,24 +128,25 @@ object MlOps {
     * directory, and the decoded dimensions stay arithmetic in the id.
     */
   private def stagedMediaDir(s: SparkSession, d: String): String =
-    graft.util.Once.memo(
-      mediaDirMemo.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap.empty),
-      d) {
-        val dir = java.nio.file.Files.createTempDirectory("graft-staged-media")
-        Multimodal.synthesizeImages(
-            Tables.documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0),
-            "doc_id")
-          .collect().foreach { r =>
-            val id = r.getAs[Long]("media_id")
-            java.nio.file.Files.write(dir.resolve(f"img_$id%08d.png"),
-              r.getAs[Array[Byte]]("payload")): Unit
-          }
-        dir.toString
-      }
+    SessionArtifacts.get(s, MediaDir, d) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-staged-media")
+      Multimodal.synthesizeImages(
+          Tables.documents(s, d).filter(pmod(col("doc_id"), lit(10)) === 0),
+          "doc_id")
+        .collect().foreach { r =>
+          val id = r.getAs[Long]("media_id")
+          java.nio.file.Files.write(dir.resolve(f"img_$id%08d.png"),
+            r.getAs[Array[Byte]]("payload")): Unit
+        }
+      dir.toString
+    }
 
-  private val mediaDirMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, graft.util.Once[String]]]())
+  private val MediaDir = new Kind[String]("staged-media", { dir =>
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try files.sorted(java.util.Comparator.reverseOrder())
+      .forEach(f => java.nio.file.Files.delete(f))
+    finally files.close()
+  })
 
   val queries: Map[String, Q] = Map(
     // PCA projection, declared as its per-row Bessel/Pythagoras

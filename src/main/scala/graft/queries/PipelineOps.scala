@@ -6,6 +6,8 @@ import graft.io.Tables
 import graft.dedup.Dedup
 import graft.similarity.{Opq, Pq, Retrieval, Similarity, Sq}
 import graft.text.{TextAnalysis, TextOps}
+import graft.util.SessionArtifacts
+import graft.util.SessionArtifacts.Kind
 
 /** Declared queries for the training-data-pipeline operators: dedup (exact,
   * shingle-Jaccard, MinHash+LSH, SimHash), similarity search (brute-force
@@ -44,67 +46,24 @@ object PipelineOps {
     * production dedup pipeline has (signatures are an *index*, not a
     * per-query intermediate).
     */
-  // keyed on the session OBJECT so entries can never leak across
-  // sessions (no identityHashCode collisions handing a new session
-  // checkpointed frames bound to a dead one). NOTE the weak key does NOT
-  // buy automatic eviction here: the memoized Datasets strongly
-  // reference their SparkSession, and the map holds the values strongly,
-  // so the key stays reachable — the WeakHashMap javadoc's
-  // value-references-key caveat. Fine for the one-session-per-JVM
-  // processes this engine runs in; a long-lived multi-session service
-  // must call [[releaseMemo]] when it stops a session.
-  // Every memo value sits in a build-exactly-once [[graft.util.Once]]
-  // cell (round 18, found by the concurrency chaos work):
-  // `TrieMap.getOrElseUpdate`'s by-name default can be EVALUATED TWICE
-  // under a race — two tenants memoizing the same artifact would both
-  // run the eager `localCheckpoint(true)` build, and the loser's pinned
-  // blocks would leak until session end (no handle survives to release
-  // them); worse, a double-built PERSISTED index races its own writer.
-  private val sharedMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, String),
-        graft.util.Once[DataFrame]]]())
+  private val Shared = new Kind[DataFrame]("shared-frame", graft.util.Pins.release(_))
+  private val Ivf = new Kind[Similarity.IvfIndex]("persisted-ivf")
+  private val RefIdx = new Kind[Similarity.IvfIndex]("ann-ref-index",
+    idx => graft.util.Pins.release(idx.cells))
+  private val PqCb = new Kind[Pq.PqCodebook]("pq-codebook")
+  private val OpqM = new Kind[Opq.OpqModel]("opq-model")
 
   private[queries] def memoized(s: SparkSession, d: String, key: String)
                       (build: => DataFrame): DataFrame =
-    graft.util.Once.memo(
-      sharedMemo.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty),
-      (d, key))(build)
+    SessionArtifacts.get(s, Shared, (d, key))(build)
 
-  /** Drop every memoized artifact bound to `s` (shared frames AND the
-    * persisted-IVF handles), releasing their pinned checkpoint blocks —
-    * the explicit hook a multi-session service calls before stopping a
-    * session (see the eviction caveat on [[sharedMemo]]).
+  /** Drop every build-once artifact bound to `s` — shared frames,
+    * indexes, quantizer and tokenizer models, resolved relations, staged
+    * files — releasing their pins, so the next call rebuilds: the
+    * explicit hook a multi-session service calls before stopping a
+    * session (see the eviction caveat on [[SessionArtifacts]]).
     */
-  def releaseMemo(s: SparkSession): Unit = {
-    Option(sharedMemo.remove(s)).foreach(_.values.foreach { cell =>
-      cell.peek.foreach { df =>
-        try graft.util.Pins.release(df) catch { case _: Throwable => }
-      }
-    })
-    ivfMemo.remove(s): Unit
-    // the ann-join reference index pins its cells (localCheckpoint) —
-    // round 18: it was never drained here, leaking one pinned cells
-    // table per retired session (and holding the session strongly via
-    // the DataFrame, defeating the weak key)
-    Option(refIdxMemo.remove(s)).foreach(_.values.foreach { cell =>
-      cell.peek.foreach { idx =>
-        try graft.util.Pins.release(idx.cells) catch { case _: Throwable => }
-      }
-    })
-    // the resolved-relation cache has the same value-references-key
-    // lifetime as sharedMemo — evict it here so one release hook frees
-    // everything a retired session pinned
-    graft.io.Tables.releaseCache(s)
-    // the tokenizer-model memos hold pinned localCheckpoint tables
-    // (BpeModel.vocabSyms, UnigramModel.segs) — without this hook,
-    // Bench's releaseArtifacts() could not give the tp_*_train* rows a
-    // genuinely fresh dedicated re-measure, and a long-lived
-    // multi-session service would leak one pinned vocab table per
-    // retired session
-    TextPipeline.releaseModelMemos(s)
-  }
+  def releaseMemo(s: SparkSession): Unit = SessionArtifacts.release(s)
 
   /** Build-once bucketed copy of a test table (hash-bucketed + sorted on
     * the join key): subsequent equi-joins between co-bucketed tables are
@@ -134,11 +93,6 @@ object PipelineOps {
       s.table(tbl)
     }
 
-  private val ivfMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        graft.util.Once[Similarity.IvfIndex]]]())
-
   /** Build-once persisted IVF index over `embeddings`: fit + cell
     * assignment happen once per (session, dataset), the cells table is
     * written `partitionBy("cell")` under the local warehouse, and queries
@@ -164,16 +118,14 @@ object PipelineOps {
   }
 
   def persistedIvfIndex(s: SparkSession, d: String): Similarity.IvfIndex =
-    graft.util.Once.memo(
-      ivfMemo.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap.empty),
-      d)({
+    SessionArtifacts.get(s, Ivf, d) {
         val path = ivfIndexPath(s, d)
         Similarity.writeIvfIndex(
           Similarity.buildIvfIndex(Tables.embeddings(s, d), "vec_id", "embedding",
             nlist = 16, seed = 42L),
           path)
         Similarity.readIvfIndex(s, path)
-      })
+      }
 
   /** Build-once IVF index over the REFERENCE half of the embeddings
     * (even vec_ids) for the cross-corpus ANN join — a genuinely separate
@@ -182,19 +134,12 @@ object PipelineOps {
     * k-means transform.
     */
   def annJoinRefIndex(s: SparkSession, d: String): Similarity.IvfIndex =
-    graft.util.Once.memo(
-      refIdxMemo.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap.empty),
-      d)({
+    SessionArtifacts.get(s, RefIdx, d) {
         val idx = Similarity.buildIvfIndex(
           Tables.embeddings(s, d).filter(pmod(col("vec_id"), lit(2)) === 0),
           "vec_id", "embedding", nlist = 8, seed = 42L)
         idx.copy(cells = idx.cells.localCheckpoint(true))
-      })
-
-  private val refIdxMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        graft.util.Once[Similarity.IvfIndex]]]())
+      }
 
   /** Build-once EXACT top-5 cosine neighbors of the `vec_id % 100 == 0`
     * query set, served through the persisted IVF index at nprobe == nlist
@@ -220,16 +165,9 @@ object PipelineOps {
     * corpus-sized but 32x slimmer than the raw floats.
     */
   def pqCodebook(s: SparkSession, d: String): Pq.PqCodebook =
-    graft.util.Once.memo(
-      pqMemo.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap.empty),
-      d)(
-        Pq.buildCodebook(Tables.embeddings(s, d), "vec_id", "embedding",
-          m = 8, ksub = 16, dim = 64, iters = 5, seed = 42L))
-
-  private val pqMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        graft.util.Once[Pq.PqCodebook]]]())
+    SessionArtifacts.get(s, PqCb, d)(
+      Pq.buildCodebook(Tables.embeddings(s, d), "vec_id", "embedding",
+        m = 8, ksub = 16, dim = 64, iters = 5, seed = 42L))
 
   def pqEncoded(s: SparkSession, d: String): DataFrame =
     memoized(s, d, "pq_encoded") {
@@ -243,16 +181,9 @@ object PipelineOps {
     * corpus-sized.
     */
   def opqModel(s: SparkSession, d: String): Opq.OpqModel =
-    graft.util.Once.memo(
-      opqMemo.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap.empty),
-      d)(
-        Opq.train(Tables.embeddings(s, d), "vec_id", "embedding",
-          m = 8, ksub = 16, dim = 64, iters = 5, seed = 42L))
-
-  private val opqMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        graft.util.Once[Opq.OpqModel]]]())
+    SessionArtifacts.get(s, OpqM, d)(
+      Opq.train(Tables.embeddings(s, d), "vec_id", "embedding",
+        m = 8, ksub = 16, dim = 64, iters = 5, seed = 42L))
 
   def opqEncoded(s: SparkSession, d: String): DataFrame =
     memoized(s, d, "opq_encoded") {

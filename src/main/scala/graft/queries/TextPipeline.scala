@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
 import graft.text.TextOps
+import graft.util.SessionArtifacts
+import graft.util.SessionArtifacts.Kind
 
 /** The reference's text-analytics pipeline (tasks 1.1–1.5) re-expressed over
   * the synthetic `documents` table: tokenize/clean → term-document count
@@ -421,18 +423,17 @@ object TextPipeline {
     */
   val BpeMerges = 8
 
-  // one trained model per (session, dataset) — the build-once artifact
-  // memo, WeakHashMap-keyed on the session like PipelineOps.memoized
-  private val bpeMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        graft.util.Once[graft.text.Bpe.BpeModel]]]())
+  // one trained model per (session, dataset); the BPE vocab tables and
+  // unigram segmentations are pinned, so their kinds release the pin
+  private val Bpe = new Kind[graft.text.Bpe.BpeModel]("bpe", _.release())
+  private val BpeBatched = new Kind[graft.text.Bpe.BpeModel]("bpe-batched", _.release())
+  private val Wp = new Kind[graft.text.WordPiece.WpModel]("wordpiece")
+  private val WpBatched = new Kind[graft.text.WordPiece.WpModel]("wordpiece-batched")
+  private val Uni = new Kind[graft.text.UnigramLm.UnigramModel]("unigram", _.release())
 
   def bpeModel(s: SparkSession, d: String): graft.text.Bpe.BpeModel =
-    graft.util.Once.memo(
-      bpeMemo.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap.empty),
-      d)(
-        graft.text.Bpe.train(Tables.documents(s, d), "text", BpeMerges))
+    SessionArtifacts.get(s, Bpe, d)(
+      graft.text.Bpe.train(Tables.documents(s, d), "text", BpeMerges))
 
   /** Batch size for the declared BATCHED trainer queries — 3 against an
     * 8-rank budget so the pass wants split 3/3/2 (exercises the
@@ -441,53 +442,15 @@ object TextPipeline {
     */
   val BpeBatchB = 3
 
-  private val bpeBatchedMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        graft.util.Once[graft.text.Bpe.BpeModel]]]())
-
   def bpeBatchedModel(s: SparkSession, d: String): graft.text.Bpe.BpeModel =
-    graft.util.Once.memo(
-      bpeBatchedMemo.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap.empty),
-      d)(
-        graft.text.Bpe.train(Tables.documents(s, d), "text", BpeMerges,
-          batchSize = BpeBatchB))
-
-  private val wpBatchedMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        graft.util.Once[graft.text.WordPiece.WpModel]]]())
+    SessionArtifacts.get(s, BpeBatched, d)(
+      graft.text.Bpe.train(Tables.documents(s, d), "text", BpeMerges,
+        batchSize = BpeBatchB))
 
   def wpBatchedModel(s: SparkSession, d: String): graft.text.WordPiece.WpModel =
-    graft.util.Once.memo(
-      wpBatchedMemo.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap.empty),
-      d)(
-        graft.text.WordPiece.train(Tables.documents(s, d), "text", WpMerges,
-          batchSize = BpeBatchB))
-
-  /** Drop every memoized tokenizer model of `s` and RELEASE the pins the
-    * models hold (BPE vocab tables, unigram segmentations — WordPiece
-    * models are driver-side only). Called from
-    * [[PipelineOps.releaseMemo]], the single release hook Bench's
-    * family-scoped artifact lifetime and contention adjudication use —
-    * without it the tp_*_train* rows would re-measure a memo lookup
-    * instead of a training run.
-    */
-  def releaseModelMemos(s: SparkSession): Unit = {
-    def drain[M](memo: java.util.Map[SparkSession,
-        scala.collection.concurrent.TrieMap[String, graft.util.Once[M]]])
-        (release: M => Unit): Unit =
-      Option(memo.remove(s)).foreach(_.values.foreach { cell =>
-        cell.peek.foreach { m =>
-          try release(m) catch { case _: Throwable => }
-        }
-      })
-    drain(bpeMemo)(_.release())
-    drain(bpeBatchedMemo)(_.release())
-    drain(uniMemo)(_.release())
-    drain(wpMemo)(_ => ())
-    drain(wpBatchedMemo)(_ => ())
-  }
+    SessionArtifacts.get(s, WpBatched, d)(
+      graft.text.WordPiece.train(Tables.documents(s, d), "text", WpMerges,
+        batchSize = BpeBatchB))
 
   /** Unigram-LM constants for the declared queries — small and fixed so
     * the oracle's generated SQL stays reviewable (the operator itself
@@ -499,34 +462,20 @@ object TextPipeline {
   val UniEmIters = 2
   val UniMaxWordLen = 10
 
-  private val uniMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        graft.util.Once[graft.text.UnigramLm.UnigramModel]]]())
-
   /** WordPiece merge ranks for the declared queries — small and fixed so
     * the oracle's generated SQL stays reviewable (the operator takes any
     * count; batching scales it like BPE's 32k demo).
     */
   val WpMerges = 8
 
-  private val wpMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        graft.util.Once[graft.text.WordPiece.WpModel]]]())
-
   def wpModel(s: SparkSession, d: String): graft.text.WordPiece.WpModel =
-    graft.util.Once.memo(
-      wpMemo.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap.empty),
-      d)(
-        graft.text.WordPiece.train(Tables.documents(s, d), "text", WpMerges))
+    SessionArtifacts.get(s, Wp, d)(
+      graft.text.WordPiece.train(Tables.documents(s, d), "text", WpMerges))
 
   def unigramModel(s: SparkSession, d: String): graft.text.UnigramLm.UnigramModel =
-    graft.util.Once.memo(
-      uniMemo.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap.empty),
-      d)(
-        graft.text.UnigramLm.train(Tables.documents(s, d), "text",
-          UniVocabSize, UniMaxPieceLen, UniEmIters))
+    SessionArtifacts.get(s, Uni, d)(
+      graft.text.UnigramLm.train(Tables.documents(s, d), "text",
+        UniVocabSize, UniMaxPieceLen, UniEmIters))
 
   private val tokensSql =
     """SELECT doc_id, unnest(string_split_regex(lower(regexp_replace(text,

@@ -1,6 +1,6 @@
 package graft.util
 
-/** Build-exactly-once cell for concurrent memo maps (round 18, found
+/** Build-exactly-once cell behind [[SessionArtifacts]] (round 18, found
   * while hardening the multi-tenant posture the chaos harness probes):
   * `TrieMap.getOrElseUpdate`'s by-name default can be EVALUATED TWICE
   * under a race — harmless for a pure value, but a losing build that
@@ -16,13 +16,4 @@ final class Once[T](build0: () => T) {
   @volatile private var built: Option[T] = None
   lazy val value: T = { val v = build0(); built = Some(v); v }
   def peek: Option[T] = built
-}
-
-object Once {
-  /** The memo pattern in one place: `Once.memo(map, key)(build)`. */
-  def memo[K, T](m: scala.collection.concurrent.TrieMap[K, Once[T]], k: K)
-                (build: => T): T = {
-    val fresh = new Once[T](() => build)
-    m.putIfAbsent(k, fresh).getOrElse(fresh).value
-  }
 }
