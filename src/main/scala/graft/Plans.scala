@@ -1,15 +1,17 @@
 package graft
 
 import java.io.PrintWriter
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import java.nio.charset.StandardCharsets
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Dumps `explain("formatted")` for a representative set of declared
-  * queries into PLANS.md, with the scale-relevant plan properties called
-  * out (pushed filters, broadcast vs shuffle exchanges, whole-stage
-  * codegen spans). Run after plan-affecting changes:
+/** Dumps `explain("formatted")` for declared queries — by default the
+  * [[headline]] set — into a markdown file (PLANS.md), with the
+  * scale-relevant plan properties called out (pushed filters, broadcast
+  * vs shuffle exchanges, whole-stage codegen spans). Run after
+  * plan-affecting changes:
   *
-  * {{{ sbt 'runMain graft.Plans /root/testdata/sf0.01 PLANS.md' }}}
+  * {{{ sbt 'runMain graft.Plans [sfDir] [out] [name,name,...]' }}}
   */
 object Plans {
 
@@ -25,6 +27,7 @@ object Plans {
     "sim_near_dup" -> "SRP-LSH: bucket equi-join + exact in-bucket cosine verify (native vec_dot) — no cross join at any scale",
     "sim_ann_ivf" -> "recall check over the persisted cell-partitioned IVF index: broadcast probe equi-join (nprobe/nlist of the scan), joined against the memoized exact result — no per-call refit, no cross join",
     "dd_jaccard_pairs" -> "inverted-index shingle self-join with the hot-shingle maxDf cap (bounds the worst join key)",
+    "dd_containment_pairs" -> "asymmetric containment pairs over the SAME capped shingle inverted index as dd_jaccard_pairs: one shared set-overlap tail, only the score expression differs (least of the set sizes)",
     "dd_cosine_pairs" -> "TF-IDF weighted cosine pairs through the SAME capped inverted index: 8-byte hashed term keys, dot products partial-aggregated per pair before the exchange, symmetric df cap — never all-pairs",
     "sim_knn_graph" -> "all-points KNN graph: SHUFFLE cell equi-join (the probe side is the corpus — never broadcast, unlike the query-set path) + bounded-heap top_k_by contraction (map-side partials cap each partition at k candidates per point)",
     "tp_hash_split" -> "pure map: deterministic split, no exchange at any scale",
@@ -70,18 +73,82 @@ object Plans {
     "tp_bpe_train_batched" -> "batched BPE trainer, the per-pass candidate plan (the declared query's result is a driver-side model table — this is the plan the loop runs twice per B merges): adjacent-pair explode is a pure map, pair counts partial-aggregate map-side into one (lhs, rhs) exchange, and the top-6B cut is TakeOrderedAndProject — only 6B rows ever reach the driver, no global sort, no window, no join at any corpus size",
     "tp_wordpiece_train_batched" -> "batched WordPiece trainer, the per-pass scored-candidate plan (prod checkpoints symCounts; dumped lazily its build shows twice): the tp_bpe_train_batched aggregate shape plus the two vocabulary-sized symbol-count attachments as BROADCAST hash joins and the micro-score projection — top-want stays TakeOrderedAndProject, the corpus-sized pair stream never sorts globally or shuffle-joins")
 
+  /** Queries whose served form materializes its result or an
+    * intermediate would explain as a LocalTableScan / checkpoint scan —
+    * zero audit value. For those, the same body's LAZY plan is explained,
+    * with a cleanup that releases any prologue pins it took.
+    */
+  private def lazyPlans(spark: SparkSession, sfDir: String)
+      : Map[String, () => (DataFrame, () => Unit)] = Map(
+    "g_triangles" -> { () =>
+      val und = graft.queries.GraphOps.canonicalUndirected(
+        graft.queries.GraphOps.pageEdges(spark, sfDir), "src", "dst")
+      var oriented: DataFrame = null
+      val plan = graft.queries.GraphOps.triangleStatsPlan(und, { o => oriented = o })
+      (plan, () => {
+        graft.util.Pins.release(und)
+        if (oriented != null) graft.util.Pins.release(oriented)
+      })
+    },
+    "ev_active_users" -> { () =>
+      val du = graft.queries.Relational.dayUsers(
+        graft.io.Tables.events(spark, sfDir))
+      (graft.queries.Relational.activeUsersPlan(du),
+        () => graft.util.Pins.release(du))
+    },
+    "ev_users_hll_merge" -> { () =>
+      val ev = graft.io.Tables.events(spark, sfDir)
+      val daily = graft.queries.Relational.dailyUserSketches(ev)
+      (graft.queries.Relational.usersHllMergePlan(ev, daily),
+        () => graft.util.Pins.release(daily))
+    },
+    "dd_cdc_apply" -> { () =>
+      val docs = graft.io.Tables.documents(spark, sfDir)
+      (graft.dedup.Dedup.cdcExcision(
+        graft.dedup.Dedup.cdcChunks(docs, "doc_id", "text"), "doc_id"),
+        () => ())
+    },
+    "tp_bpe_train_batched" -> { () =>
+      val docs = graft.io.Tables.documents(spark, sfDir)
+      (graft.text.Bpe.batchCandidates(
+        graft.text.Bpe.symsTable(docs, "text"), 18), () => ())
+    },
+    "tp_wordpiece_train_batched" -> { () =>
+      val docs = graft.io.Tables.documents(spark, sfDir)
+      val tbl = graft.text.Bpe.symsTable(docs, "text")
+      val symCounts = tbl
+        .select(F.explode(F.col("syms")).as("sym"), F.col("cnt"))
+        .groupBy("sym")
+        .agg(F.sum("cnt").as("c"))
+      (graft.text.WordPiece.batchScoredCandidates(tbl, symCounts, 3),
+        () => ())
+    }) ++ graft.queries.PipelineOps.nearDupQueries(lazyPlan = true).map {
+      case (name, q) => name -> (() => (q(spark, sfDir), () => ()))
+    }
+
+  /** `explain("formatted")` of the plan `name` serves on `sfDir`, with
+    * giant binary literals (e.g. the serialized bloom filter in
+    * might_contain) elided — the plan SHAPE is the point, not the bits.
+    */
+  private[graft] def explain(spark: SparkSession, sfDir: String, name: String): String = {
+    val (df, cleanup) = lazyPlans(spark, sfDir).get(name)
+      .map(_.apply())
+      .getOrElse((SparkEntry.queries(name)(spark, sfDir), () => ()))
+    try df.queryExecution.explainString(FormattedMode).trim
+      .replaceAll("0x[0-9A-Fa-f]{256,}", "0x…<binary literal elided>")
+    finally cleanup()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val why = headline.toMap
+    val names =
+      if (args.length > 2) args(2).split(",").toSeq else headline.map(_._1)
+    val spark = GraftSession.build("local[4]", Some(32), "graft-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
-    val w = new PrintWriter(out)
+    val w = new PrintWriter(out, StandardCharsets.UTF_8)
     w.println("# PLANS — physical plans of the headline queries")
     w.println()
     w.println(s"Generated by `graft.Plans` on `$sfDir`. What to look for per plan:")
@@ -90,78 +157,20 @@ object Plans {
     w.println("`WholeStageCodegen` spans (codegen coverage), partial/final `HashAggregate`")
     w.println("pairs (map-side combine).")
     w.println()
-    // Queries that eagerly materialize their (small) result inside the
-    // pin's lifetime would print a LocalTableScan / checkpoint scan —
-    // zero audit value. For those, explain the LAZY internal plan the
-    // materialization collects, releasing its prologue pins afterwards.
-    val lazyOverrides: Map[String, () => (org.apache.spark.sql.DataFrame, () => Unit)] = Map(
-      "g_triangles" -> { () =>
-        val und = graft.queries.GraphOps.canonicalUndirected(
-          graft.queries.GraphOps.pageEdges(spark, sfDir), "src", "dst")
-        var oriented: org.apache.spark.sql.DataFrame = null
-        val plan = graft.queries.GraphOps.triangleStatsPlan(und, { o => oriented = o })
-        (plan, () => {
-          graft.util.Pins.release(und)
-          if (oriented != null) graft.util.Pins.release(oriented)
-        })
-      },
-      "ev_active_users" -> { () =>
-        val du = graft.queries.Relational.dayUsers(
-          graft.io.Tables.events(spark, sfDir))
-        (graft.queries.Relational.activeUsersPlan(du),
-          () => graft.util.Pins.release(du))
-      },
-      "ev_users_hll_merge" -> { () =>
-        val ev = graft.io.Tables.events(spark, sfDir)
-        val daily = graft.queries.Relational.dailyUserSketches(ev)
-        (graft.queries.Relational.usersHllMergePlan(ev, daily),
-          () => graft.util.Pins.release(daily))
-      },
-      "dd_cdc_apply" -> { () =>
-        val docs = graft.io.Tables.documents(spark, sfDir)
-        (graft.dedup.Dedup.cdcExcision(
-          graft.dedup.Dedup.cdcChunks(docs, "doc_id", "text"), "doc_id"),
-          () => ())
-      },
-      "tp_bpe_train_batched" -> { () =>
-        val docs = graft.io.Tables.documents(spark, sfDir)
-        (graft.text.Bpe.batchCandidates(
-          graft.text.Bpe.symsTable(docs, "text"), 18), () => ())
-      },
-      "tp_wordpiece_train_batched" -> { () =>
-        val docs = graft.io.Tables.documents(spark, sfDir)
-        val tbl = graft.text.Bpe.symsTable(docs, "text")
-        val symCounts = tbl
-          .select(org.apache.spark.sql.functions.explode(
-            org.apache.spark.sql.functions.col("syms")).as("sym"),
-            org.apache.spark.sql.functions.col("cnt"))
-          .groupBy("sym")
-          .agg(org.apache.spark.sql.functions.sum("cnt").as("c"))
-        (graft.text.WordPiece.batchScoredCandidates(tbl, symCounts, 3),
-          () => ())
-      })
-
-    headline.foreach { case (name, why) =>
-      val (df, cleanup) = lazyOverrides.get(name)
-        .map(_.apply())
-        .getOrElse((SparkEntry.queries(name)(spark, sfDir), () => ()))
-      val qe: QueryExecution = df.queryExecution
-      val formatted = qe.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    names.foreach { name =>
       w.println(s"## $name")
       w.println()
-      w.println(s"**Why this plan matters:** $why")
-      w.println()
+      why.get(name).foreach { y =>
+        w.println(s"**Why this plan matters:** $y")
+        w.println()
+      }
       w.println("```")
-      // elide giant binary literals (e.g. the serialized bloom filter in
-      // might_contain) — the plan SHAPE is the point, not the filter bits
-      w.println(formatted.trim.replaceAll("0x[0-9A-Fa-f]{256,}", "0x…<binary literal elided>"))
+      w.println(explain(spark, sfDir, name))
       w.println("```")
       w.println()
-      cleanup()
     }
     w.close()
-    println(s"[plans] wrote ${headline.size} plans to $out")
+    println(s"[plans] wrote ${names.size} plans to $out")
     spark.stop()
   }
 }

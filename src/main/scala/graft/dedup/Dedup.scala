@@ -396,46 +396,29 @@ object Dedup {
       idCol, textCol, maxBroadcastRows)
 
   def repeatedSpans(docs: DataFrame, idCol: String, textCol: String,
-                    k: Int = 8): DataFrame = {
-    val grams = positionalGrams(docs, idCol, textCol, k)
-      .localCheckpoint(true) // feeds both the df aggregate and the span join
-    // "seen in >1 doc" ⟺ min(id) ≠ max(id): the countDistinct form
-    // rounds ≤18 used here rewrites into a two-exchange distinct
-    // aggregate ((gram, id) partial-distinct, then gram), while min/max
-    // partial-aggregate map-side into ONE gram exchange (guide §2.3 —
-    // aggregate before you shuffle) with identical semantics.
+                    k: Int = 8): DataFrame =
+    // the gram checkpoint feeds both the df aggregate and the span join;
+    // the lazy result still reads it, so it stays pinned
+    repeatedSpansPlan(docs, idCol, textCol, k, _.localCheckpoint(true))
+
+  /** The one body of [[repeatedSpans]]: `stage` is applied to the gram
+    * table. The served form checkpoints it there; with `identity` nothing
+    * is materialized, which is the plan [[graft.Plans]] dumps.
+    */
+  private[graft] def repeatedSpansPlan(docs: DataFrame, idCol: String,
+                                       textCol: String, k: Int,
+                                       stage: DataFrame => DataFrame = identity): DataFrame = {
+    val grams = stage(positionalGrams(docs, idCol, textCol, k))
+    // "seen in >1 doc" ⟺ min(id) ≠ max(id): min/max partial-aggregate
+    // map-side into ONE gram exchange (guide §2.3 — aggregate before you
+    // shuffle), while countDistinct(id) > 1 plans a four-deep
+    // HashAggregate chain keyed on (gram, id) and, where the partial
+    // distinct cannot stay map-side, a second exchange.
     val crossDocGrams = grams
       .groupBy("gram")
       .agg(min(col(idCol)).as("__lo"), max(col(idCol)).as("__hi"))
       .filter(col("__lo") =!= col("__hi"))
       .select("gram")
-    mergeWindowSpans(grams.join(crossDocGrams, Seq("gram"), "left_semi"), idCol, k)
-  }
-
-  /** Lazy audit variant of [[repeatedSpans]] (no eager gram checkpoint,
-    * so the dumped plan shows the real pipeline instead of a checkpoint
-    * scan — the [[jaccardPairsFromShinglesLazy]] convention; the lazy
-    * form re-derives the gram table per consumer by construction).
-    * `r18DistinctFilter` reconstructs the round-18 cross-doc filter
-    * (`countDistinct(id) > 1`) verbatim so the plans/r19 before/after
-    * evidence diffs the aggregate rewrite alone. Plan-dump use only —
-    * the served query stays [[repeatedSpans]].
-    */
-  private[graft] def repeatedSpansLazy(docs: DataFrame, idCol: String,
-                                       textCol: String, k: Int,
-                                       r18DistinctFilter: Boolean = false): DataFrame = {
-    val grams = positionalGrams(docs, idCol, textCol, k)
-    val crossDocGrams =
-      if (r18DistinctFilter)
-        grams.groupBy("gram")
-          .agg(countDistinct(col(idCol)).as("__docs"))
-          .filter(col("__docs") > 1)
-          .select("gram")
-      else
-        grams.groupBy("gram")
-          .agg(min(col(idCol)).as("__lo"), max(col(idCol)).as("__hi"))
-          .filter(col("__lo") =!= col("__hi"))
-          .select("gram")
     mergeWindowSpans(grams.join(crossDocGrams, Seq("gram"), "left_semi"), idCol, k)
   }
 
@@ -609,16 +592,28 @@ object Dedup {
     */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                    n: Int = 3, threshold: Double = 0.5,
-                   maxDf: Option[Long] = None): DataFrame = {
-    // materialize the HASHED, capped form: (id, bigint) is what the
-    // sizes pass and both join sides consume — no reason to pin strings
-    // (see [[jaccardPairsFromShingles]] for the cap shape)
-    def hashed = hashedByShingle(shingles(docs, idCol, textCol, n), idCol)
-    val capped = maxDf.map(dropHotHashed(hashed, _)).getOrElse(hashed)
-      .localCheckpoint(true)
-    val result = jaccardFromHashed(capped, idCol, threshold).localCheckpoint(true)
-    graft.util.Pins.release(capped)
-    result
+                   maxDf: Option[Long] = None): DataFrame =
+    jaccardPairsFromShingles(shingles(docs, idCol, textCol, n), idCol,
+      threshold, maxDf)
+
+  /** Serves a pair scorer's plan body: each intermediate the body passes
+    * to `stage` is checkpointed (it feeds several plans), the checkpoint
+    * before it is released once the new one has materialized, and the
+    * small pair result is checkpointed before the last pin is released,
+    * so no executor storage outlives the call. The same body run with
+    * `identity` materializes nothing: that is the plan [[graft.Plans]]
+    * dumps.
+    */
+  private[graft] def servedPairs(body: (DataFrame => DataFrame) => DataFrame): DataFrame = {
+    var held = Option.empty[DataFrame]
+    def stage(df: DataFrame): DataFrame = {
+      val pinned = df.localCheckpoint(true)
+      held.foreach(graft.util.Pins.release)
+      held = Some(pinned)
+      pinned
+    }
+    try body(stage).localCheckpoint(true)
+    finally held.foreach(graft.util.Pins.release)
   }
 
   /** Hash + co-partition an (id, shingle) table by the 8-byte shingle
@@ -627,10 +622,8 @@ object Dedup {
     * then reuse without re-exchanging (guide §2.4 — operations keyed
     * the same way share one exchange; `localCheckpoint` preserves the
     * materialized partitioning, the same property the graph loops'
-    * transition tables rely on). Replaces the round-≤18 shape, which
-    * capped df with a window (`count(*) OVER (PARTITION BY shingle)`)
-    * — a full sort of the shingle-STRING table per call — and then let
-    * the self-join exchange the table twice more.
+    * transition tables rely on). A df window over the shingle strings
+    * would sort the whole table per call instead.
     */
   private def hashedByShingle(sh0: DataFrame, idCol: String): DataFrame =
     // NO repartition here: under AQE a localCheckpoint materializes with
@@ -657,6 +650,16 @@ object Dedup {
     hashed.join(hot, Seq("__sh"), "left_anti")
   }
 
+  /** The hashed, capped (id, __sh) shingle table a set-overlap scorer's
+    * `stage` receives: the cap costs one partial-aggregated exchange of
+    * (8-byte key, count) partials plus a broadcast anti join.
+    */
+  private def cappedHashed(sh0: DataFrame, idCol: String,
+                           maxDf: Option[Long]): DataFrame = {
+    val hashed = hashedByShingle(sh0, idCol)
+    maxDf.map(dropHotHashed(hashed, _)).getOrElse(hashed)
+  }
+
   /** [[jaccardPairs]] over a PREBUILT (id, shingle) table — the serving
     * path when the shingle inverted index is materialized once per
     * corpus and shared across queries, like the MinHash/SimHash
@@ -665,47 +668,27 @@ object Dedup {
     */
   def jaccardPairsFromShingles(sh0: DataFrame, idCol: String,
                                threshold: Double = 0.5,
-                               maxDf: Option[Long] = None): DataFrame = {
-    // materialize the hashed, CAPPED (id, bigint) table ONCE: the sizes
-    // pass and both self-join sides read the checkpoint instead of each
-    // re-deriving the cap; the cap itself costs one partial-aggregated
-    // exchange of (8-byte key, count) partials plus a broadcast anti
-    // join — the round-≤18 window form sorted the whole shingle-STRING
-    // table per call. The result is materialized before the
-    // intermediate unpersists.
-    val capped = maxDf
-      .map(dropHotHashed(hashedByShingle(sh0, idCol), _))
-      .getOrElse(hashedByShingle(sh0, idCol))
-      .localCheckpoint(true)
-    val result = jaccardFromHashed(capped, idCol, threshold).localCheckpoint(true)
-    graft.util.Pins.release(capped)
-    result
-  }
+                               maxDf: Option[Long] = None): DataFrame =
+    servedPairs(jaccardPairsPlan(sh0, idCol, threshold, maxDf, _))
 
-  /** [[jaccardPairsFromShingles]] minus the eager checkpoints — the
-    * LAZY plan for the PLANS.md / plans-r19 audit (the eager form's own
-    * explain is a checkpoint scan with zero audit value, the same
-    * reason Plans.scala carries lazyOverrides for triangleStats).
-    * Not a serving path: without the materialization the three
-    * consumers would each re-run the hash+repartition exchange.
-    */
-  private[graft] def jaccardPairsFromShinglesLazy(sh0: DataFrame, idCol: String,
-                                                  threshold: Double,
-                                                  maxDf: Option[Long]): DataFrame = {
-    val hashed = hashedByShingle(sh0, idCol)
-    val capped = maxDf.map(dropHotHashed(hashed, _)).getOrElse(hashed)
-    jaccardFromHashed(capped, idCol, threshold)
-  }
+  /** The one body of [[jaccardPairsFromShingles]] (see [[servedPairs]]). */
+  private[graft] def jaccardPairsPlan(sh0: DataFrame, idCol: String,
+                                      threshold: Double, maxDf: Option[Long],
+                                      stage: DataFrame => DataFrame = identity): DataFrame =
+    overlapPairs(stage(cappedHashed(sh0, idCol, maxDf)), idCol, "jaccard",
+      threshold)((inter, sizeA, sizeB) => inter / (sizeA + sizeB - inter))
 
-  /** Jaccard pairs over a hashed (idCol, __sh bigint) shingle table: the
-    * inverted-index self-join keys on `xxhash64(shingle)` — an 8-byte
+  /** Set-overlap pairs over a hashed (idCol, __sh bigint) shingle table:
+    * the inverted-index self-join keys on `xxhash64(shingle)` — an 8-byte
     * bigint through the join shuffle instead of the raw n-gram string
     * (~2-3x fewer key bytes on 3-word shingles). Internal equality key
     * only, never exposed; a 64-bit collision (needs ~2^32 distinct
     * shingles for birthday odds) at worst nudges one intersection count.
+    * `scoreOf(inter_size, size_a, size_b)` computes the `score` column.
     */
-  private def jaccardFromHashed(sh: DataFrame, idCol: String,
-                                threshold: Double): DataFrame = {
+  private def overlapPairs(sh: DataFrame, idCol: String, score: String,
+                           threshold: Double)
+                          (scoreOf: (Column, Column, Column) => Column): DataFrame = {
     val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("set_size"))
     val a = sh.select(col(idCol).as("id_a"), col("__sh"))
     val b = sh.select(col(idCol).as("id_b"), col("__sh"))
@@ -715,17 +698,15 @@ object Dedup {
     // round 19: the planner did exactly that, building the full table's
     // broadcast relation three times — 2x slower at bench scale and a
     // driver bomb at 100 TB; same j_shuffle_join rationale)
-    val inter = a.hint("merge").join(b, "__sh")
+    a.hint("merge").join(b, "__sh")
       .filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("inter_size"))
-    inter
       .join(sizes.withColumnRenamed(idCol, "id_a").withColumnRenamed("set_size", "size_a"), "id_a")
       .join(sizes.withColumnRenamed(idCol, "id_b").withColumnRenamed("set_size", "size_b"), "id_b")
-      .withColumn("jaccard",
-        col("inter_size") / (col("size_a") + col("size_b") - col("inter_size")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+      .withColumn(score, scoreOf(col("inter_size"), col("size_a"), col("size_b")))
+      .filter(col(score) >= threshold)
+      .select("id_a", "id_b", score)
   }
 
   /** CONTAINMENT pairs — the asymmetric near-dup score symmetric
@@ -744,48 +725,15 @@ object Dedup {
     */
   def containmentPairsFromShingles(sh0: DataFrame, idCol: String,
                                    threshold: Double = 0.8,
-                                   maxDf: Option[Long] = None): DataFrame = {
-    // same capped-checkpoint posture as [[jaccardPairsFromShingles]]
-    val capped = maxDf
-      .map(dropHotHashed(hashedByShingle(sh0, idCol), _))
-      .getOrElse(hashedByShingle(sh0, idCol))
-      .localCheckpoint(true)
-    val result = containmentFromHashed(capped, idCol, threshold)
-      .localCheckpoint(true)
-    graft.util.Pins.release(capped)
-    result
-  }
+                                   maxDf: Option[Long] = None): DataFrame =
+    servedPairs(containmentPairsPlan(sh0, idCol, threshold, maxDf, _))
 
-  /** [[containmentPairsFromShingles]] minus the eager checkpoints — the
-    * lazy audit variant (see [[jaccardPairsFromShinglesLazy]]). */
-  private[graft] def containmentPairsFromShinglesLazy(sh0: DataFrame, idCol: String,
-                                                      threshold: Double,
-                                                      maxDf: Option[Long]): DataFrame = {
-    val hashed = hashedByShingle(sh0, idCol)
-    val capped = maxDf.map(dropHotHashed(hashed, _)).getOrElse(hashed)
-    containmentFromHashed(capped, idCol, threshold)
-  }
-
-  private def containmentFromHashed(capped: DataFrame, idCol: String,
-                                    threshold: Double): DataFrame = {
-    val sizes = capped.groupBy(idCol).agg(count(lit(1)).as("set_size"))
-    val a = capped.select(col(idCol).as("id_a"), col("__sh"))
-    val b = capped.select(col(idCol).as("id_b"), col("__sh"))
-    // merge hint: see jaccardFromHashed — corpus-sized sides must not
-    // broadcast on a dipped estimate
-    a.hint("merge").join(b, "__sh")
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("inter_size"))
-      .join(sizes.withColumnRenamed(idCol, "id_a")
-        .withColumnRenamed("set_size", "size_a"), "id_a")
-      .join(sizes.withColumnRenamed(idCol, "id_b")
-        .withColumnRenamed("set_size", "size_b"), "id_b")
-      .withColumn("containment",
-        col("inter_size") / least(col("size_a"), col("size_b")))
-      .filter(col("containment") >= threshold)
-      .select("id_a", "id_b", "containment")
-  }
+  /** The one body of [[containmentPairsFromShingles]] (see [[servedPairs]]). */
+  private[graft] def containmentPairsPlan(sh0: DataFrame, idCol: String,
+                                          threshold: Double, maxDf: Option[Long],
+                                          stage: DataFrame => DataFrame = identity): DataFrame =
+    overlapPairs(stage(cappedHashed(sh0, idCol, maxDf)), idCol, "containment",
+      threshold)((inter, sizeA, sizeB) => inter / least(sizeA, sizeB))
 
   /** Weighted sparse cosine all-pairs over TF-IDF term vectors — the
     * lexical near-dup scorer one notch finer than [[jaccardPairs]]
@@ -806,30 +754,23 @@ object Dedup {
     */
   def cosinePairs(docs: DataFrame, idCol: String, textCol: String,
                   threshold: Double = 0.3,
-                  maxDf: Option[Long] = None): DataFrame = {
-    // TF on the 8-byte hashed term key, co-partitioned by term: the df
-    // rollup, the df-cap filter and BOTH dot-product join sides derive
-    // from the one materialized exchange with zero further exchanges —
-    // the [[hashedByShingle]] posture. Rounds ≤18 computed df with a
-    // window (`count(*) OVER (PARTITION BY term)`), a full sort of the
-    // (id, term-string) table per call, and re-exchanged both join
-    // sides. Hashing before the df count merges colliding terms' dfs —
-    // the same ~2⁻³² tolerance the join key already accepts.
-    val tfh = cosineTf(docs, idCol, textCol).localCheckpoint(true)
-    val wts = cosineWeights(tfh, docs, idCol, maxDf).localCheckpoint(true)
-    graft.util.Pins.release(tfh)
-    val result = cosineTail(wts, idCol, threshold).localCheckpoint(true)
-    graft.util.Pins.release(wts)
-    result
-  }
+                  maxDf: Option[Long] = None): DataFrame =
+    servedPairs(cosinePairsPlan(docs, idCol, textCol, threshold, maxDf, _))
 
-  /** [[cosinePairs]] minus the eager checkpoints — the lazy audit
-    * variant (see [[jaccardPairsFromShinglesLazy]]). */
-  private[graft] def cosinePairsLazy(docs: DataFrame, idCol: String,
+  /** The one body of [[cosinePairs]] (see [[servedPairs]]). TF on the
+    * 8-byte hashed term key, co-partitioned by term: the df rollup, the
+    * df-cap filter and BOTH dot-product join sides derive from the one
+    * staged exchange with zero further exchanges — the [[hashedByShingle]]
+    * posture, where a df window would sort the (id, term-string) table.
+    * Hashing before the df count merges colliding terms' dfs — the same
+    * ~2⁻³² tolerance the join key already accepts.
+    */
+  private[graft] def cosinePairsPlan(docs: DataFrame, idCol: String,
                                      textCol: String, threshold: Double,
-                                     maxDf: Option[Long]): DataFrame =
+                                     maxDf: Option[Long],
+                                     stage: DataFrame => DataFrame = identity): DataFrame =
     cosineTail(
-      cosineWeights(cosineTf(docs, idCol, textCol), docs, idCol, maxDf),
+      stage(cosineWeights(stage(cosineTf(docs, idCol, textCol)), docs, idCol, maxDf)),
       idCol, threshold)
 
   private def cosineTf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -858,7 +799,7 @@ object Dedup {
     val norms = wts.groupBy(idCol).agg(sqrt(sum(col("__w") * col("__w"))).as("__nrm"))
     val a = wts.select(col(idCol).as("id_a"), col("__t"), col("__w").as("__wa"))
     val b = wts.select(col(idCol).as("id_b"), col("__t"), col("__w").as("__wb"))
-    // merge hint: see jaccardFromHashed — corpus-sized sides must not
+    // merge hint: see overlapPairs — corpus-sized sides must not
     // broadcast on a dipped estimate
     a.hint("merge").join(b, "__t")
       .filter(col("id_a") < col("id_b"))

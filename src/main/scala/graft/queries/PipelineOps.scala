@@ -402,7 +402,53 @@ object PipelineOps {
     }
   }
 
-  val queries: Map[String, Q] = Map(
+  /** The declared near-dup scorers, each call written once. Registered
+    * in [[queries]] as served (intermediates checkpointed and released,
+    * see `Dedup.servedPairs`); with `lazyPlan` the same scorer body runs
+    * with nothing materialized — the plan [[graft.Plans]] dumps.
+    */
+  private[graft] def nearDupQueries(lazyPlan: Boolean): Map[String, Q] = {
+    def pairs(body: (DataFrame => DataFrame) => DataFrame): DataFrame =
+      if (lazyPlan) body(identity) else Dedup.servedPairs(body)
+    Map(
+      // Hot-shingle cap (maxDf=50) in the declared query: above the observed
+      // max df at test scale (25 at sf0.1), so results are identical here,
+      // while the plan carries the guard that bounds the inverted-index
+      // join's worst key (Σdf² blowup on boilerplate shingles) at 100 TB.
+      // Serves from the build-once shingle index like the signature tables.
+      "dd_jaccard_pairs" -> ((s, d) => pairs(Dedup.jaccardPairsPlan(
+        shingleTable(s, d), "doc_id", threshold = 0.5, maxDf = Some(50L), _))),
+
+      // Asymmetric CONTAINMENT pairs (|A∩B| / min size): fires when a
+      // small doc is embedded inside a much larger one — |A∩B| ≈ |A| with
+      // |A| << |B| keeps Jaccard tiny while the smaller doc is fully
+      // contained. Same capped inverted-index machinery off the same
+      // build-once shingle table; the threshold is lower-signal than 1.0
+      // so partial quoting still surfaces.
+      "dd_containment_pairs" -> ((s, d) => pairs(Dedup.containmentPairsPlan(
+        shingleTable(s, d), "doc_id", threshold = 0.8, maxDf = Some(50L), _))),
+
+      // TF-IDF weighted cosine all-pairs (the lexical scorer a notch finer
+      // than Jaccard: rare shared terms count for more). Same capped
+      // inverted-index posture as dd_jaccard_pairs — term-key equi-join,
+      // partial-aggregated dot products, symmetric maxDf cap — never
+      // all-pairs.
+      "dd_cosine_pairs" -> ((s, d) => pairs(Dedup.cosinePairsPlan(
+        Tables.documents(s, d), "doc_id", "text", threshold = 0.3,
+        maxDf = Some(50L), _))),
+
+      // Exact-substring repeated spans (Lee et al. ACL'22 "ExactSubstr",
+      // re-expressed on shuffle-partitioned positional k-gram hashes): the
+      // maximal cross-document 8-token spans a training pipeline would cut.
+      // k=8 at test scale keeps the fixture corpus's templated sentences
+      // detectable; nothing in the plan is quadratic. Served, the gram
+      // table is checkpointed (Dedup.repeatedSpans).
+      "dd_repeated_spans" -> ((s, d) => Dedup.repeatedSpansPlan(
+        Tables.documents(s, d), "doc_id", "text", k = 8,
+        if (lazyPlan) identity else _.localCheckpoint(true))))
+  }
+
+  val queries: Map[String, Q] = Map[String, Q](
     "dd_exact" -> ((s, d) =>
       Dedup.exact(Tables.documents(s, d), "doc_id", "text")),
 
@@ -492,42 +538,6 @@ object PipelineOps {
         "doc_id", "text")),
 
     "dd_shingles" -> ((s, d) => shingleTable(s, d)),
-
-    // Hot-shingle cap (maxDf=50) in the declared query: above the observed
-    // max df at test scale (25 at sf0.1), so results are identical here,
-    // while the plan carries the guard that bounds the inverted-index
-    // join's worst key (Σdf² blowup on boilerplate shingles) at 100 TB.
-    // Serves from the build-once shingle index like the signature tables.
-    "dd_jaccard_pairs" -> ((s, d) =>
-      Dedup.jaccardPairsFromShingles(shingleTable(s, d), "doc_id",
-        threshold = 0.5, maxDf = Some(50L))),
-
-    // Asymmetric CONTAINMENT pairs (|A∩B| / min size): fires when a
-    // small doc is embedded inside a much larger one — |A∩B| ≈ |A| with
-    // |A| << |B| keeps Jaccard tiny while the smaller doc is fully
-    // contained. Same capped inverted-index machinery off the same
-    // build-once shingle table; the threshold is lower-signal than 1.0
-    // so partial quoting still surfaces.
-    "dd_containment_pairs" -> ((s, d) =>
-      Dedup.containmentPairsFromShingles(shingleTable(s, d), "doc_id",
-        threshold = 0.8, maxDf = Some(50L))),
-
-    // TF-IDF weighted cosine all-pairs (the lexical scorer a notch finer
-    // than Jaccard: rare shared terms count for more). Same capped
-    // inverted-index posture as dd_jaccard_pairs — term-key equi-join,
-    // partial-aggregated dot products, symmetric maxDf cap — never
-    // all-pairs.
-    "dd_cosine_pairs" -> ((s, d) =>
-      Dedup.cosinePairs(Tables.documents(s, d), "doc_id", "text",
-        threshold = 0.3, maxDf = Some(50L))),
-
-    // Exact-substring repeated spans (Lee et al. ACL'22 "ExactSubstr",
-    // re-expressed on shuffle-partitioned positional k-gram hashes): the
-    // maximal cross-document 8-token spans a training pipeline would cut.
-    // k=8 at test scale keeps the fixture corpus's templated sentences
-    // detectable; nothing in the plan is quadratic.
-    "dd_repeated_spans" -> ((s, d) =>
-      Dedup.repeatedSpans(Tables.documents(s, d), "doc_id", "text", k = 8)),
 
     // Span-level decontamination: WHERE the eval-set leak sits in each
     // corpus doc (maximal 8-token ranges sharing a gram with the
@@ -1216,7 +1226,7 @@ object PipelineOps {
               - lit(1.015) * col("n_words") / col("n_sentences")
               - lit(84.6) * col("n_syllables") / col("n_words")).as("flesch"))
     })
-  )
+  ) ++ nearDupQueries(lazyPlan = false)
 
   // ---- oracle SQL ---------------------------------------------------------
 

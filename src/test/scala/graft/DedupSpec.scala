@@ -86,6 +86,35 @@ class DedupSpec extends AnyFunSuite {
       s"equal capped vectors still cosine 1.0: $capped")
   }
 
+  test("served near-dup scorers collect the same rows as their lazy plan bodies") {
+    // the plan graft.Plans dumps is the served scorer minus its
+    // checkpoints; both must compute the same pairs and spans
+    import org.apache.spark.sql.DataFrame
+    val sh = Dedup.shingles(docs, "doc_id", "text", 3)
+    def pairs(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    def assertSamePairs(what: String, served: DataFrame, plan: DataFrame): Unit = {
+      val (a, b) = (pairs(served), pairs(plan))
+      assert(a.nonEmpty, s"$what: the fixture must produce pairs")
+      assert(a.keySet == b.keySet, s"$what: served $a vs plan $b")
+      a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-12, s"$what $k: $v vs ${b(k)}") }
+    }
+    assertSamePairs("jaccard",
+      Dedup.jaccardPairsFromShingles(sh, "doc_id", 0.3, Some(2L)),
+      Dedup.jaccardPairsPlan(sh, "doc_id", 0.3, Some(2L)))
+    assertSamePairs("containment",
+      Dedup.containmentPairsFromShingles(sh, "doc_id", 0.5, None),
+      Dedup.containmentPairsPlan(sh, "doc_id", 0.5, None))
+    assertSamePairs("cosine",
+      Dedup.cosinePairs(docs, "doc_id", "text", 0.1, Some(3L)),
+      Dedup.cosinePairsPlan(docs, "doc_id", "text", 0.1, Some(3L)))
+    def spans(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSet
+    val served = spans(Dedup.repeatedSpans(docs, "doc_id", "text", k = 4))
+    assert(served.nonEmpty, "the fixture must produce repeated spans")
+    assert(served == spans(Dedup.repeatedSpansPlan(docs, "doc_id", "text", 4)))
+  }
+
   test("minhash signatures: identical docs share all hashes; lsh finds dups") {
     val sig = Dedup.minhashSignatures(docs, "doc_id", "text", 3, 8).collect()
       .map(r => r.getLong(0) -> (1 to 8).map(r.getString)).toMap

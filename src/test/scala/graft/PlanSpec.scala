@@ -410,6 +410,25 @@ class PlanSpec extends AnyFunSuite {
       s"serialization-boxed UDF survived in the Lloyd iteration:\n$asgPlan")
   }
 
+  test("near-dup scorers dump their served pipelines: merge-hinted self-joins, no bare checkpoint scan") {
+    def dumped(q: String) = Plans.explain(spark, SparkTestSession.sfDir, q)
+    // the operator tree heading the formatted plan, one operator a line
+    def tree(p: String) = p.linesIterator.drop(1).takeWhile(_.trim.nonEmpty).toSeq
+    Seq("dd_jaccard_pairs", "dd_containment_pairs", "dd_cosine_pairs",
+      "dd_repeated_spans").foreach { q =>
+      val p = dumped(q)
+      assert(tree(p).exists(op => !op.contains("Scan ExistingRDD") &&
+        !op.contains("AdaptiveSparkPlan")),
+        s"$q dumps a bare checkpoint scan, which audits nothing:\n$p")
+      if (q != "dd_repeated_spans")
+        assert(p.contains("SortMergeJoin"),
+          s"$q: the corpus-sized self-join must stay a merge join:\n$p")
+      else
+        assert(!p.contains("CartesianProduct") && !p.contains("NestedLoopJoin"),
+          s"$q: nothing quadratic belongs in the span pipeline:\n$p")
+    }
+  }
+
   test("CDC dedup excision: one chunk-table exchange, two windows, ZERO joins (no self-join)") {
     // feed the excision a leaf chunk table so the assertion scopes to
     // the excision layer itself, not cdcChunks' own build
