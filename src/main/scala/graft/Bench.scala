@@ -168,25 +168,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Same opt-in cross-process master override as Verify (round-17):
-    // SPARK_GRAFT_MASTER=local-cluster[2,8,4096] + SPARK_GRAFT_JARS for
-    // the executor-side graft classes. Unset → the local[32] contract.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // bounded-heap typed aggregates must stay HASH-aggregated: the
-      // 128-key default silently degrades them to an external sort of
-      // the pre-contraction candidate stream (see GraftSession)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "100000")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(builder.config("spark.jars", _))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv("graft-bench")
 
     // Optional comma-separated filter for single-query iteration.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -345,11 +327,8 @@ object Bench {
     }.sum
     // Failures carry their message, not just a bare negative time — a
     // vanished query must name itself in the artifact (round-8 lesson).
-    def jstr(s: String): String = graft.util.Jsons.str(s)
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString(""","errors":{""", ",", "}") +
-      flaky.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-        .mkString(""","flaky":{""", ",", "}") +
+    import graft.util.Jsons.{str => jstr, strMap}
+    val errJson = s""","errors":${strMap(errors)},"flaky":${strMap(flaky)}""" +
       s""","adjudicated":${entries(adjudicated.map { case (n, s, _) => (n, s) })}""" +
       f""","value_adjudicated":$totalAdj%.3f""" +
       f""","adjudication_load":$adjLoad%.2f""" +

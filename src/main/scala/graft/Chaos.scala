@@ -43,7 +43,7 @@ object Chaos {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val threads = sys.env.getOrElse("SPARK_GRAFT_CHAOS_THREADS", "4").toInt
-    val spark = GraftSession.build()
+    val spark = GraftSession.fromEnv("graft-chaos")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
       .getOrElse(sys.error("SPARK_GRAFT_ONLY is required (pass the sf1 gate set)"))
     val selected = SparkEntry.queries.filter { case (n, _) => only.contains(n) }

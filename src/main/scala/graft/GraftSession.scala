@@ -15,19 +15,48 @@ import org.apache.spark.sql.SparkSession
   *  - Graft extensions injected: native SQL functions (`vec_dot`,
   *    `rolling_hash`, `hamming`), the HOF dot-product rewrite rule, and
   *    the broadcast as-of join strategy.
+  *  - `SPARK_GRAFT_JARS` (comma-separated), when set, becomes
+  *    `spark.jars`: executor JVMs of a `local-cluster` or real master
+  *    need the graft classes.
   *
   * On a real cluster, prefer
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions` plus
   * site-specific sizing; this builder is the single-JVM equivalent.
+  * Every harness main builds its session through [[fromEnv]].
   */
 object GraftSession {
+
+  /** The harness environment contract as (master, shuffle partitions):
+    * `SPARK_GRAFT_CPUS` (default the machine's processor count) sizes
+    * both `local[cpus]` and the partitions; `SPARK_GRAFT_MASTER`
+    * (e.g. `local-cluster[2,8,4096]` for real executor JVMs) overrides
+    * the master only.
+    */
+  private[graft] def resolveEnv(env: Map[String, String]): (String, Int) = {
+    val cpus = env.get("SPARK_GRAFT_CPUS").fold(
+      Runtime.getRuntime.availableProcessors()) { v =>
+      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+    (env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), cpus)
+  }
+
+  /** [[build]] on the harness environment ([[resolveEnv]] over
+    * `sys.env`), logging at WARN — the one session every main runs.
+    */
+  def fromEnv(appName: String): SparkSession = {
+    val (master, parts) = resolveEnv(sys.env)
+    val spark = build(master, Some(parts), appName)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   def build(master: String = "local[*]",
             shufflePartitions: Option[Int] = None,
             appName: String = "graft"): SparkSession = {
     val parts = shufflePartitions.getOrElse(
       Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.adaptive.enabled", "true")
@@ -44,7 +73,8 @@ object GraftSession {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "100000")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    sys.env.get("SPARK_GRAFT_JARS").foreach(builder.config("spark.jars", _))
+    val spark = builder.getOrCreate()
     // extensions don't apply to a pre-existing session from getOrCreate —
     // make registration idempotent either way
     graft.functions.GraftFunctions.register(spark)

@@ -24,7 +24,7 @@ object Plans {
     "o3b_group_topk_agg" -> "bounded-heap top-k typed aggregate (k-bounded shuffle)",
     "j_asofb_broadcast" -> "custom BroadcastAsofJoinExec: map-only probe, zero exchanges",
     "t4_tfidf" -> "two windows over one shuffle pair (TF by doc, DF by token)",
-    "sim_near_dup" -> "SRP-LSH: bucket equi-join + exact in-bucket cosine verify (native vec_dot) — no cross join at any scale",
+    "sim_near_dup" -> "SRP-LSH (dumped lazily — the declared query checkpoints this body): bucket equi-join + exact in-bucket cosine verify (native vec_dot) — no cross join at any scale",
     "sim_ann_ivf" -> "recall check over the persisted cell-partitioned IVF index: broadcast probe equi-join (nprobe/nlist of the scan), joined against the memoized exact result — no per-call refit, no cross join",
     "dd_jaccard_pairs" -> "inverted-index shingle self-join with the hot-shingle maxDf cap (bounds the worst join key)",
     "dd_containment_pairs" -> "asymmetric containment pairs over the SAME capped shingle inverted index as dd_jaccard_pairs: one shared set-overlap tail, only the score expression differs (least of the set sizes)",
@@ -101,6 +101,9 @@ object Plans {
       val daily = graft.queries.Relational.dailyUserSketches(ev)
       (graft.queries.Relational.usersHllMergePlan(ev, daily),
         () => graft.util.Pins.release(daily))
+    },
+    "sim_near_dup" -> { () =>
+      (graft.queries.PipelineOps.srpPairsPlan(spark, sfDir), () => ())
     },
     "dd_cdc_apply" -> { () =>
       val docs = graft.io.Tables.documents(spark, sfDir)

@@ -14,8 +14,8 @@ import scala.util.control.NonFatal
   * {{{ sbt 'runMain graft.Profile /root/testdata/sf0.1 g_pagerank,g_triangles' }}}
   *
   * Not part of the driver contract — a diagnosis tool only; results in
-  * OPTIMIZATION_r19.md. Reuses Bench's session settings so measured
-  * shapes match the official bench.
+  * OPTIMIZATION_r19.md. Builds its session with [[GraftSession.fromEnv]],
+  * the one Bench builds, so measured shapes match the official bench.
   */
 object Profile {
 
@@ -65,17 +65,7 @@ object Profile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(Seq("g_pagerank"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "100000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv("graft-profile")
 
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

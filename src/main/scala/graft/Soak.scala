@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
@@ -36,9 +36,10 @@ object Soak {
     // The "spill" set is a ROBUSTNESS posture, not a throughput one: the
     // session starts with a starved unified-memory region
     // (spark.memory.fraction, default 0.6 → 0.1 here — a static conf,
-    // so it must land before getOrCreate), forcing the heavy shapes'
-    // sorts/aggregations through the spill path that a 100 TB run's
-    // worst executor inevitably hits. Pass criterion: the shapes
+    // so it goes in as a system property, which SparkConf loads, before
+    // the session exists), forcing the heavy shapes' sorts/aggregations
+    // through the spill path that a 100 TB run's worst executor
+    // inevitably hits. Pass criterion: the shapes
     // COMPLETE (no OOM) and the task-metrics listener shows nonzero
     // spilled bytes — completing without spilling proves nothing and is
     // flagged. THE RIGHT STARVATION KNOB IS THE FRACTION, NOT THE HEAP:
@@ -51,25 +52,10 @@ object Soak {
     // engine finding (measured round 16; at the default 8g heap the
     // same 100× run completes by spilling).
     // parsed eagerly: fail on garbage here, not inside the session
-    // builder — and emit the NUMBER into the JSON line below, never the
-    // raw env string (".1"/"1e-1" are valid fractions for Spark but
-    // invalid bare JSON tokens)
-    val memFraction =
-      sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.1").toDouble
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // keep bounded-heap typed aggregates hash-aggregated (see
-      // GraftSession's fallback-threshold note)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "100000")
-      .config("spark.ui.enabled", "false")
     if (soakSets("spill"))
-      builder.config("spark.memory.fraction", memFraction.toString)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      System.setProperty("spark.memory.fraction",
+        sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.1").toDouble.toString)
+    val spark = GraftSession.fromEnv("graft-soak")
 
     // spill telemetry: summed off TaskMetrics at task end, snapshotted
     // per shape — the listener is cheap and always on, so any shape
@@ -1141,9 +1127,12 @@ object Soak {
         "spilled — raise SPARK_GRAFT_MULT or lower SPARK_GRAFT_MEM_FRACTION; " +
         "this run does not demonstrate spill robustness")
     val spillJson =
-      if (soakSets("spill"))
+      if (soakSets("spill")) {
+        // the fraction the session runs with, read back as a number
+        val memFraction =
+          spark.sparkContext.getConf.get("spark.memory.fraction").toDouble
         f""","mem_fraction":$memFraction%.4f,"spilled_mem_mb":${spilledMem.get() / 1048576.0}%.0f,"spilled_disk_mb":${spilledDisk.get() / 1048576.0}%.0f"""
-      else ""
+      } else ""
     println(f"""{"metric":"soak_total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","mult":$mult$spillJson%s}""")
     spark.stop()
   }

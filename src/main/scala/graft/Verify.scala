@@ -1,32 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.util.Jsons.strMap
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Opt-in cross-process certification (round-17): SPARK_GRAFT_MASTER
-    // can point at e.g. local-cluster[2,8,4096] — real executor JVMs, so
-    // task/broadcast/kernel serialization is actually exercised instead
-    // of riding single-JVM reference sharing. Executor JVMs need the
-    // graft classes on their classpath: pass the `sbt package` jar via
-    // SPARK_GRAFT_JARS (comma-separated). The driver never sets either,
-    // so the gate stays local[32].
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep bounded-heap typed aggregates hash-aggregated (see
-      // GraftSession's fallback-threshold note)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "100000")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(builder.config("spark.jars", _))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated filter for single-query iteration (same
     // contract as Bench's); the driver never sets it, so the gate always
@@ -44,21 +24,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: $msg")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      strMap(SparkEntry.oracleSql))
     // Suite-parity gate: a loader/analysis break must fail the round
     // LOUDLY, not shrink the correctness file to a smaller-but-green
     // suite (round 8's silent loss of 10 events queries). Emit a
@@ -67,7 +34,7 @@ object Verify {
     val dumped = selected.size - errors.size
     val summary =
       s"""{"queries_declared":${SparkEntry.queries.size},"queries_selected":${selected.size},""" +
-      s""""queries_dumped":$dumped,"errors":${errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")}}"""
+      s""""queries_dumped":$dumped,"errors":${strMap(errors)}}"""
     Files.writeString(Paths.get(s"$outDir/verify_summary.json"), summary)
     if (errors.nonEmpty) {
       println(s"[verify] PARITY FAIL: $dumped/${selected.size} dumped; " +

@@ -103,13 +103,7 @@ object BbcRun {
 
   def main(args: Array[String]): Unit = {
     val Array(corpusDir, fixtureDir, pointsCsv, outDir) = args
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv("graft-bbc")
     run(spark, Paths(corpusDir, s"$fixtureDir/bbc.terms", s"$fixtureDir/bbc.docs",
       s"$fixtureDir/stopwords.txt", pointsCsv, outDir))
     spark.stop()

@@ -252,17 +252,20 @@ object PipelineOps {
                             approx: DataFrame): DataFrame =
     recallContract(exactIvfTopK(s, d), approx, "n_results", floor = 2)
 
+  /** The SRP near-dup pair pipeline `sim_near_dup` serves, lazy: the
+    * body [[srpPairs]] checkpoints and the plan `graft.Plans` audits.
+    */
+  private[graft] def srpPairsPlan(s: SparkSession, d: String): DataFrame =
+    Similarity.srpNearDupPairs(Tables.embeddings(s, d), "vec_id", "embedding",
+      threshold = 0.4, numPlanes = 4, dim = 64)
+
   /** Build-once SRP near-dup pair table — `sim_near_dup` declares it and
     * `sim_dedup_apply`'s closure consumes the identical set; memoizing
     * stops the bucket + in-bucket-verify pipeline from running twice per
     * harness pass (the same rationale as the shingle/signature tables).
     */
   private def srpPairs(s: SparkSession, d: String): DataFrame =
-    memoized(s, d, "srp_pairs") {
-      Similarity.srpNearDupPairs(Tables.embeddings(s, d), "vec_id", "embedding",
-        threshold = 0.4, numPlanes = 4, dim = 64)
-        .localCheckpoint(true)
-    }
+    memoized(s, d, "srp_pairs")(srpPairsPlan(s, d).localCheckpoint(true))
 
   /** Build-once EXACT all-points KNN graph — [[Similarity.knnGraph]] at
     * `nprobe == nlist` (every pair scored once via the cell join, so the

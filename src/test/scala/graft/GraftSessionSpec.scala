@@ -27,4 +27,18 @@ class GraftSessionSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastAsofJoin"))
   }
+
+  test("the harness environment resolves to (master, shuffle partitions) without a session") {
+    val nproc = Runtime.getRuntime.availableProcessors()
+    assert(GraftSession.resolveEnv(Map.empty) == (s"local[$nproc]", nproc))
+    assert(GraftSession.resolveEnv(Map("SPARK_GRAFT_CPUS" -> "3")) == ("local[3]", 3))
+    assert(GraftSession.resolveEnv(Map(
+      "SPARK_GRAFT_MASTER" -> "local-cluster[2,8,4096]", "SPARK_GRAFT_CPUS" -> "3"))
+      == ("local-cluster[2,8,4096]", 3))
+    assert(GraftSession.resolveEnv(Map("SPARK_GRAFT_MASTER" -> "local[2]"))
+      == ("local[2]", nproc))
+    val e = intercept[IllegalArgumentException](
+      GraftSession.resolveEnv(Map("SPARK_GRAFT_CPUS" -> "abc")))
+    assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains("abc"))
+  }
 }

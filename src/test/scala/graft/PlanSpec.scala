@@ -132,11 +132,9 @@ class PlanSpec extends AnyFunSuite {
 
   // the declared sim_near_dup serves a memoized CHECKPOINT (one SRP pass
   // feeds it and sim_dedup_apply), so the plan worth auditing is the
-  // builder's, inspected directly
+  // lazy body it checkpoints, inspected directly
   private def srpPlan: String =
-    graft.similarity.Similarity.srpNearDupPairs(
-        Tables.embeddings(spark, SparkTestSession.sfDir),
-        "vec_id", "embedding", threshold = 0.4, numPlanes = 4, dim = 64)
+    graft.queries.PipelineOps.srpPairsPlan(spark, SparkTestSession.sfDir)
       .queryExecution.sparkPlan.toString
 
   test("similarity pair scoring has no per-pair array allocation (native vec_dot)") {
@@ -415,17 +413,17 @@ class PlanSpec extends AnyFunSuite {
     // the operator tree heading the formatted plan, one operator a line
     def tree(p: String) = p.linesIterator.drop(1).takeWhile(_.trim.nonEmpty).toSeq
     Seq("dd_jaccard_pairs", "dd_containment_pairs", "dd_cosine_pairs",
-      "dd_repeated_spans").foreach { q =>
+      "dd_repeated_spans", "sim_near_dup").foreach { q =>
       val p = dumped(q)
       assert(tree(p).exists(op => !op.contains("Scan ExistingRDD") &&
         !op.contains("AdaptiveSparkPlan")),
         s"$q dumps a bare checkpoint scan, which audits nothing:\n$p")
-      if (q != "dd_repeated_spans")
+      if (q != "dd_repeated_spans" && q != "sim_near_dup")
         assert(p.contains("SortMergeJoin"),
           s"$q: the corpus-sized self-join must stay a merge join:\n$p")
       else
         assert(!p.contains("CartesianProduct") && !p.contains("NestedLoopJoin"),
-          s"$q: nothing quadratic belongs in the span pipeline:\n$p")
+          s"$q: nothing quadratic belongs in this pipeline:\n$p")
     }
   }
 

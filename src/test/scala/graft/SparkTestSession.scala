@@ -11,6 +11,8 @@ import org.apache.spark.sql.SparkSession
   * streaming suites' fixture closures live in test-classes). Remember
   * `SPARK_SCALA_VERSION=2.13` in the environment or the executor
   * launcher dies before the first task. Unset → the local[4] contract.
+  * Not built by GraftSession: FunctionsSpec's HOF-rewrite cases take
+  * their baseline from a session without the RewriteHofDotProduct rule.
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
