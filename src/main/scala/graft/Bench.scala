@@ -62,7 +62,9 @@ import scala.util.control.NonFatal
   * a single 2+ KB JSON line can get truncated mid-line and parse to
   * nothing):
   *  1. the FULL result JSON is written to `BENCH_FULL.json` in the
-  *     working directory,
+  *     working directory (or `SPARK_GRAFT_OUT`; a `SPARK_GRAFT_ONLY`
+  *     run without it writes no file), and the compact line's `"full"`
+  *     names that file, `null` when none was written,
   *  2. the full line is printed first,
   *  3. a compact line (same schema; slowest queries first, capped at
   *     ~1.5 KB so it always survives a 2 KB tail window together with
@@ -347,9 +349,11 @@ object Bench {
     // an explicit SPARK_GRAFT_OUT always writes (the user redirected the
     // artifact away from BENCH_FULL.json, so the ONLY-filter clobber
     // protection no longer applies)
-    if (only.isEmpty || sys.env.contains("SPARK_GRAFT_OUT"))
+    val written = Option.when(only.isEmpty || sys.env.contains("SPARK_GRAFT_OUT")) {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(outFile), fullJson + "\n")
+      outFile
+    }
     println(fullJson)
 
     // Compact line: slowest-first per-query entries under a byte budget,
@@ -357,13 +361,13 @@ object Bench {
     val budget = 1500
     val desc = results.sortBy { case (_, v) => -math.abs(v) }
     val kept = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    var used = 180 // wrapper + extras allowance
+    var used = 165 + written.fold(0)(_.length) // wrapper + extras allowance
     desc.foreach { case (k, v) =>
       val cost = k.length + 12
       if (used + cost <= budget) { kept += ((k, v)); used += cost }
     }
     val extra = s""","n_queries":${results.size},"queries_omitted":${results.size - kept.size},"n_errors":${errors.size},"n_flaky":${flaky.size},"n_adjudicated":${adjudicated.size},"n_unresolved":${unresolved.size}""" +
-      f""","value_adjudicated":$totalAdj%.3f,"full":"BENCH_FULL.json""""
+      f""","value_adjudicated":$totalAdj%.3f,"full":""" + written.fold("null")(jstr)
     println(wrap(entries(kept.toSeq), extra))
     spark.stop()
   }

@@ -84,7 +84,7 @@ object Profile {
 
       println(f"%n=== $name  wall=$wall%.3f s ===")
       val jobsWall = rec.jobs.map(j => (j.end - j.start) / 1e3).sum
-      println(f"jobs=${rec.jobs.size} total-job-wall=$jobsWall%.3f s " +
+      println(f"jobs=${rec.jobs.size} stages=${rec.stages.size} total-job-wall=$jobsWall%.3f s " +
         f"driver-gap=${wall - jobsWall}%.3f s")
       rec.jobs.sortBy(j => -(j.end - j.start)).take(12).foreach { j =>
         println(f"  job ${j.id}%3d ${(j.end - j.start) / 1e3}%7.3f s  ${j.desc.take(80)}")

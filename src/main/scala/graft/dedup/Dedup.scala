@@ -532,13 +532,9 @@ object Dedup {
     */
   private def positionalGrams(docs: DataFrame, idCol: String,
                               textCol: String, k: Int): DataFrame = {
-    // NOTE (round 19): a session-width repartition(id) under the lead
-    // windows was tried (to spread the gram build off AQE's 1-2-task
-    // byte-coalesced layout) and REVERTED on measurement: wall time was
-    // flat (0.38 vs 0.34 s) while total task time inflated ~19x
-    // (0.53 -> 9.9 s across 32 tasks, cpu alone 14x) — allocation-heavy
-    // window work saturates the box when spread. AQE's byte-based
-    // sizing stays; at scale this exchange arrives wide on real bytes.
+    // no session-width repartition(id) under the lead windows: spread,
+    // this allocation-heavy window work inflated task time ~19x for flat
+    // wall time; AQE's byte-based sizing stays.
     val toksPos = docs.select(col(idCol),
       posexplode(TextOps.tokens(col(textCol))).as(Seq("pos", "tok")))
     val w = Window.partitionBy(idCol).orderBy("pos")
@@ -585,10 +581,8 @@ object Dedup {
     * (sizes are computed from the capped set).
     *
     * The shingle table feeds three plans (sizes + both join sides), so it
-    * is eagerly materialized via localCheckpoint; the result is likewise
-    * materialized before the intermediate is unpersisted, so no executor
-    * storage leaks past the call (pair results are small by construction
-    * — they're dup candidates, not the corpus).
+    * is served as a [[servedPairs]] stage; only the (small — dup
+    * candidates, not the corpus) pair result stays pinned.
     */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                    n: Int = 3, threshold: Double = 0.5,
@@ -597,22 +591,19 @@ object Dedup {
       threshold, maxDf)
 
   /** Serves a pair scorer's plan body: each intermediate the body passes
-    * to `stage` is checkpointed (it feeds several plans), the checkpoint
-    * before it is released once the new one has materialized, and the
-    * small pair result is checkpointed before the last pin is released,
-    * so no executor storage outlives the call. The same body run with
-    * `identity` materializes nothing: that is the plan [[graft.Plans]]
-    * dumps.
+    * to `stage` (it feeds several plans), then the small pair result,
+    * advances one pin through [[graft.util.Pins.advance]], so only the
+    * result's pin outlives the call. The same body run with `identity`
+    * materializes nothing: that is the plan [[graft.Plans]] dumps.
     */
   private[graft] def servedPairs(body: (DataFrame => DataFrame) => DataFrame): DataFrame = {
     var held = Option.empty[DataFrame]
     def stage(df: DataFrame): DataFrame = {
-      val pinned = df.localCheckpoint(true)
-      held.foreach(graft.util.Pins.release)
+      val pinned = held.fold(df.localCheckpoint(true))(graft.util.Pins.advance(_, df))
       held = Some(pinned)
       pinned
     }
-    try body(stage).localCheckpoint(true)
+    try { val out = stage(body(stage)); held = None; out }
     finally held.foreach(graft.util.Pins.release)
   }
 
@@ -627,8 +618,8 @@ object Dedup {
     */
   private def hashedByShingle(sh0: DataFrame, idCol: String): DataFrame =
     // NO repartition here: under AQE a localCheckpoint materializes with
-    // UnknownPartitioning (measured round 19 — the checkpoint scan
-    // prints `UnknownPartitioning(0)`, so downstream joins re-exchange
+    // UnknownPartitioning (the checkpoint scan prints
+    // `UnknownPartitioning(0)`, so downstream joins re-exchange
     // regardless and a pre-checkpoint repartition is a pure extra
     // exchange). The map stays narrow: (id, 8-byte hash) is what every
     // consumer shuffles.
@@ -694,9 +685,8 @@ object Dedup {
     val b = sh.select(col(idCol).as("id_b"), col("__sh"))
     // merge hint: the self-join's sides are CORPUS-sized — a checkpoint
     // whose size estimate dips under the broadcast threshold must not
-    // flip this to a broadcast of the whole inverted index (measured
-    // round 19: the planner did exactly that, building the full table's
-    // broadcast relation three times — 2x slower at bench scale and a
+    // flip this to a broadcast of the whole inverted index (the planner
+    // did so, building it three times — 2x slower at bench scale and a
     // driver bomb at 100 TB; same j_shuffle_join rationale)
     a.hint("merge").join(b, "__sh")
       .filter(col("id_a") < col("id_b"))
@@ -815,8 +805,7 @@ object Dedup {
   /** Fuzzy record linkage: id pairs whose `nameCol` values share a
     * `prefixLen`-char blocking prefix, differ in length by at most
     * `lenTol`, and sit within Levenshtein distance `maxDist` — with BOTH
-    * quadratic dimensions capped (round 18; this was the engine's last
-    * unbounded-quadratic declared query):
+    * quadratic dimensions capped:
     *
     *  - '''distinct-name blocks''' (`maxBlock`): within a block the exact
     *    path compares all name pairs — quadratic in DISTINCT names per
@@ -842,7 +831,7 @@ object Dedup {
     * while bounding the sf1/100 TB shape.
     *
     * The matched-name-pairs side of the id expansion is broadcast only
-    * up to `maxBroadcastPairs` (round 19): a pathological corpus can
+    * up to `maxBroadcastPairs`: a pathological corpus can
     * match O(distinct-names × block-width) name pairs, and an
     * unconditional broadcast would collect them on the driver. Past the
     * bound the expansion becomes a shuffle join — identical output,
@@ -904,12 +893,12 @@ object Dedup {
     // Matched name pairs, materialized ONCE (they feed the expansion
     // join and the broadcast-or-shuffle decision): localCheckpoint runs
     // the exact+LSH verify a single time, and the resulting block-backed
-    // count is free. The broadcast is GUARDED since round 19 — it was
-    // unconditional, and a pathological corpus (every name near every
-    // other within a block) can match O(distinct-names x block-width)
-    // pairs, which no driver should be asked to collect. Past
-    // `maxBroadcastPairs` the expansion falls back to a shuffle join on
-    // `name_a` — same output, no driver-sized structure anywhere.
+    // count is free. The broadcast is GUARDED: a pathological corpus
+    // (every name near every other within a block) can match
+    // O(distinct-names x block-width) pairs, which no driver should be
+    // asked to collect. Past `maxBroadcastPairs` the expansion falls
+    // back to a shuffle join on `name_a` — same output, no driver-sized
+    // structure anywhere.
     val namePairs = exactPairs.unionByName(lshPairs).localCheckpoint(true)
     // id expansion, capped: the k smallest ids per name via the bounded
     // heap (ord is a constant, so the tie-ASC order IS "smallest ids";
@@ -922,9 +911,9 @@ object Dedup {
       .select(col("nm"), col("e.payload").as("id"))
     // The id-expansion join's OUTPUT (ids-per-name x matched pairs) is
     // orders of magnitude larger than either input, so — same as the
-    // similarity probe joins fixed by the round-17 sf1 gate — pin both
-    // sides with explicit repartitions AQE leaves alone; input-byte
-    // stage sizing would push the whole expansion through 1-2 tasks.
+    // similarity probe joins — pin both sides with explicit repartitions
+    // AQE leaves alone; input-byte stage sizing would push the whole
+    // expansion through 1-2 tasks.
     val spark = records.sparkSession
     val parts = math.max(spark.sparkContext.defaultParallelism,
       spark.sessionState.conf.numShufflePartitions)
@@ -1254,30 +1243,26 @@ object Dedup {
       // resolve original nodes through this round's relabeling; nodes
       // whose representative is already final (contracted away in an
       // earlier round) pass through unchanged. Round 1's overall map is
-      // the identity, so the resolution IS this round's labels — skip
-      // the join.
-      val prevOverall = overall
+      // the identity, so the resolution IS this round's labels (same node
+      // set and columns) — skip the join.
       overall =
-        if (round == 0) lab // identical node set, columns already (node, component)
-        else prevOverall.as("o")
+        if (round == 0) { graft.util.Pins.release(overall); lab }
+        else graft.util.Pins.advance(overall, overall.as("o")
           .join(lab.as("u"), col("o.component") === col("u.node"), "left")
           .select(col("o.node").as("node"),
-            coalesce(col("u.component"), col("o.component")).as("component"))
-          .localCheckpoint(true)
-      graft.util.Pins.release(prevOverall)
+            coalesce(col("u.component"), col("o.component")).as("component")))
       // contract: rewrite edges between the new representatives —
       // intra-component edges become self-loops and vanish
-      val prevCur = cur
-      cur = prevCur.as("e")
+      val contracted = cur.as("e")
         .join(lab.as("a"), col("e.src") === col("a.node"))
         .join(lab.as("b"), col("e.dst") === col("b.node"))
         .select(col("a.component").as("src"), col("b.component").as("dst"))
         .filter(col("src") =!= col("dst"))
         .distinct()
-        .localCheckpoint(true)
-      if (!(prevCur eq edges)) graft.util.Pins.release(prevCur)
-      // round 1: `overall` IS lab's checkpoint — its pin is released as
-      // `overall` at the end (or replaced next round)
+      // `edges` is the cached first state, released with the caches below
+      cur = if (cur eq edges) contracted.localCheckpoint(true)
+        else graft.util.Pins.advance(cur, contracted)
+      // round 1: `overall` IS lab's checkpoint — released as `overall`
       if (!(overall eq lab)) graft.util.Pins.release(lab)
       round += 1
     }

@@ -80,22 +80,16 @@ object GraphOps {
       .repartition(col("src"))
       .localCheckpoint(true)
 
-    // ONE loop state table (round 19): (node, tp, dang, pr) — the
-    // teleport vector and the dangling flag ride as COLUMNS of the rank
-    // state instead of two standalone |V| checkpoints joined back every
-    // iteration. Per iteration this removes the teleport SMJ and the
-    // dangling semi-join (the dangling-mass scalar becomes a flag
-    // filter over the state itself) — two fewer |V| joins per
-    // iteration at any scale, and three fewer setup checkpoints here.
-    // Uniform teleport: tp = 1/N. Personalized: tp = 1/|seeds∩V| on
-    // seeds, 0 elsewhere. dang = node has no outgoing edge (derived
-    // from trans' src set — same anti-join semantics as the old
-    // standalone dangling table).
+    // ONE loop state table: (node, tp, dang, pr) — the teleport vector
+    // and the dangling flag ride as COLUMNS of the rank state, so an
+    // iteration joins no standalone |V| table back in. Uniform teleport:
+    // tp = 1/N. Personalized: tp = 1/|seeds∩V| on seeds, 0 elsewhere.
+    // dang = node has no outgoing edge (trans' src set).
     val outSrc = trans.select(col("src").as("node")).distinct()
       .withColumn("has_out", lit(1))
     val withDang = nodes.join(outSrc, Seq("node"), "left")
       .select(col("node"), col("has_out").isNull.as("dang"))
-    var ranks = (seedNodes match {
+    val ranks0 = (seedNodes match {
       case None =>
         val nDf = nodes.agg(count(lit(1)).cast("double").as("n_nodes"))
         withDang.crossJoin(broadcast(nDf))
@@ -112,50 +106,27 @@ object GraphOps {
             col("dang"))
     }).withColumn("pr", col("tp"))
       .localCheckpoint(true)
-
-    // by-NAME column references throughout the loop: once lineage spans
-    // two iterations (checkpoint cadence below), dataset-attribute
-    // references like trans("dst") become ambiguous — the previous
-    // iteration's rank plan embeds the same trans attributes — while
-    // name resolution against the joined OUTPUT schemas (kept disjoint:
-    // ranks (node, tp, dang, pr), trans (src, dst, p)) stays
-    // well-defined and lets DeduplicateRelations rewrite the reused
-    // subtree.
-    // nodes fed the (now-materialized) state checkpoint and nothing
-    // else — release its pinned blocks before the loop
+    // nodes fed the (now-materialized) state checkpoint and nothing else
     graft.util.Pins.release(nodes)
 
-    // the superseded-checkpoint chain: once iteration i's checkpoint is
-    // materialized, iteration i−1's is dead weight (the house contract —
-    // Pins.scala — forbids leaving the loop's stale |V| pins to GC
-    // timing, same release discipline as connectedComponents' rounds)
-    var superseded = ranks
-    for (i <- 1 to iters) {
+    // by-NAME column references in the step: once lineage spans two
+    // iterations, dataset-attribute references like trans("dst") become
+    // ambiguous, while names resolve against the disjoint output schemas
+    // (ranks (node, tp, dang, pr), trans (src, dst, p)). A halved
+    // checkpoint cadence was measured and bought nothing.
+    graft.util.Pins.iterate(ranks0, iters) { ranks =>
       val contrib = ranks.join(trans, col("node") === col("src"))
         .groupBy(col("dst"))
         .agg(sum(col("pr") * col("p")).as("contrib"))
       val dangMass = ranks.filter(col("dang"))
         .agg(coalesce(sum("pr"), lit(0.0)).as("dmass"))
-      ranks = ranks.join(contrib, col("node") === col("dst"), "left")
+      ranks.join(contrib, col("node") === col("dst"), "left")
         .crossJoin(broadcast(dangMass))
         .select(col("node"), col("tp"), col("dang"),
           (lit(1.0 - damping) * col("tp") +
             lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
               col("dmass") * col("tp"))).as("pr"))
-      // truncate lineage between iterations (a halved, every-2nd cadence
-      // was measured and bought nothing — the barrier cost is offset by
-      // the deeper plan, so keep the simpler invariant); the LAST
-      // iteration stays a live plan — reading the final checkpoint plus
-      // the teleport/trans/dangling artifacts, which therefore stay
-      // pinned for the caller — so callers (and the PLANS.md audit) see
-      // the real per-iteration shape instead of a checkpoint scan
-      if (i < iters) {
-        ranks = ranks.localCheckpoint(true)
-        graft.util.Pins.release(superseded)
-        superseded = ranks
-      }
-    }
-    ranks.select(col("node"), col("pr"))
+    }.select(col("node"), col("pr"))
   }
 
   /** Synchronous label propagation (community detection — Raghavan et
@@ -174,9 +145,9 @@ object GraphOps {
     * table — one join shuffle into the edges, one (node, label)
     * partial-aggregated rollup, one bounded argmax per node (weight
     * sums of integer counts are double-exact, so the tie-break is
-    * engine-portable). Superseded label checkpoints are released per
-    * the house Pins contract; the last iteration stays a live plan so
-    * callers see the real per-iteration shape.
+    * engine-portable). The label state advances through
+    * [[graft.util.Pins.iterate]]; `sym` and the last label checkpoint
+    * stay pinned for the caller.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        wCol: String, iters: Int): DataFrame = {
@@ -185,32 +156,20 @@ object GraphOps {
     val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst"), col("w")))
       .repartition(col("src"))
       .localCheckpoint(true)
-    var lab = sym.select(col("src").as("node")).distinct()
+    val lab0 = sym.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
       .localCheckpoint(true)
-    var superseded = lab
-    for (i <- 1 to iters) {
+    graft.util.Pins.iterate(lab0, iters) { lab =>
       val contrib = sym.join(lab.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"), col("label"))
         .agg(sum("w").as("wsum"))
-      // winner's node set IS lab's node set: every lab node appears as a
-      // sym src (lab0 = distinct src), hence — symmetrized edges — as a
-      // dst, and every sym row joins (lab covers all srcs), so the
-      // relabel join-back rounds ≤18 carried (lab ⟕ winner + coalesce)
-      // was provably the identity on winner. Dropping it removes one
-      // |V| join per sweep at any scale.
-      lab = contrib.groupBy("node")
+      // no relabel join-back (lab ⟕ winner): every lab node is a sym src,
+      // hence — symmetrized edges — a dst, so the winner covers lab's
+      // node set and the join-back would be the identity
+      contrib.groupBy("node")
         .agg(min(struct((-col("wsum")).as("nw"), col("label").as("l"))).as("best"))
         .select(col("node"), col("best.l").as("label"))
-      if (i < iters) {
-        lab = lab.localCheckpoint(true)
-        graft.util.Pins.release(superseded)
-        superseded = lab
-      }
     }
-    // sym and the last label checkpoint stay pinned for the caller (the
-    // returned plan reads both), same lifetime contract as powerIterate
-    lab
   }
 
   /** Triangle count + global clustering coefficient over an undirected
@@ -268,13 +227,9 @@ object GraphOps {
       .select(col("node").as("walk_id"), col("node"))
       .localCheckpoint(true)
     // Each hop materializes ONCE as its own |V|-sized checkpoint and the
-    // result is the lazy union of all hop checkpoints (round 19). Rounds
-    // ≤18 also re-checkpointed the ACCUMULATED union every hop — hop t
-    // re-wrote all t·|V| earlier rows, O(steps²·|V|) checkpoint bytes
-    // across the walk instead of O(steps·|V|), plus one extra eager job
-    // per hop. The hop checkpoints stay pinned for the caller (the
-    // returned plan reads them), the same lifetime contract as
-    // powerIterate's final-iteration artifacts.
+    // result is the lazy union of all hop checkpoints — O(steps·|V|)
+    // checkpoint bytes, not a re-checkpointed accumulated union. Every
+    // hop stays pinned for the caller: the returned union reads them all.
     val hops = scala.collection.mutable.ArrayBuffer[DataFrame](frontier)
     for (t <- 1 to steps) {
       val key = pmod(graft.functions.TextExprs.rollingHash(
@@ -306,33 +261,25 @@ object GraphOps {
     * lower bound on the true core: by round r every node peeled needed
     * at most r fringe layers removed to expose it, and the true k-core
     * is the limit. Per round: one degree rollup (|E| partial-aggregated)
-    * + two semi-joins; the edge set is checkpointed per round so the
-    * next round's joins read a materialized shrinking table, superseded
-    * checkpoints released per the Pins contract.
+    * + two semi-joins; the edge set advances through
+    * [[graft.util.Pins.iterate]], so each round's joins read a
+    * materialized shrinking table.
     *
     * Output: the surviving nodes with their degree inside the surviving
     * subgraph — (node, degree).
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
             k: Int, rounds: Int): DataFrame = {
-    var und = canonicalUndirected(edges, srcCol, dstCol) // checkpointed
-    var superseded = und
-    var r = 0
-    while (r < rounds) {
+    val und = graft.util.Pins.iterate(
+        canonicalUndirected(edges, srcCol, dstCol), rounds) { und =>
       val deg = und.select(col("a").as("node"))
         .union(und.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("degree"))
       val kept = deg.filter(col("degree") >= k).select("node")
-      und = und
+      und
         .join(kept.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(kept.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
         .select("a", "b")
-      r += 1
-      if (r < rounds) {
-        und = und.localCheckpoint(true)
-        graft.util.Pins.release(superseded)
-        superseded = und
-      }
     }
     // final degrees inside the surviving subgraph, re-filtered at k
     // (the last peel can re-expose sub-k nodes; they are NOT survivors)
@@ -437,10 +384,9 @@ object GraphOps {
     // pageEdges is pinned ONCE here (the g_components discipline):
     // powerIterate references its edge frame ~5 times (node union x2,
     // out-weight agg, transition join), and each reference would replay
-    // the events window plan. Safe to release in finally: every
-    // loop-invariant artifact (teleport/trans/dangling) is eagerly
-    // checkpointed inside powerIterate, so the returned plan never
-    // reads the edge frame.
+    // the events window plan. Safe to release in finally: trans and the
+    // rank state are eagerly checkpointed inside powerIterate, so the
+    // returned plan never reads the edge frame.
     "g_pagerank" -> ((s, d) => {
       val edges = pageEdges(s, d).localCheckpoint(true)
       try pageRank(edges, "src", "dst", "w", Iters, Damping)
@@ -497,7 +443,7 @@ object GraphOps {
         // materialize BEFORE releasing `edges`: connectedComponents' local
         // (driver union-find) path returns a plan whose singleton anti-join
         // still reads `nodes` → `edges` lazily. The caller owns the
-        // returned |V|-sized pin (powerIterate's documented contract).
+        // returned |V|-sized pin.
         graft.dedup.Dedup.connectedComponents(nodes, "page", strong, "a", "b")
           .select(col("node").as("page"), col("component"))
           .localCheckpoint(true)

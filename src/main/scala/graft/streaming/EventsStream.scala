@@ -611,7 +611,7 @@ object EventsStream {
       } else if (s != null) {
         // nothing buffered but a session is open: arm the flush timer at
         // its gap horizon so idleness alone seals it, deleting the
-        // horizon a session extension superseded
+        // horizon a session extension replaced
         val h = s.lastTs / 1000L + gapMicros / 1000L + 1
         if (prevHorizon != 0L && prevHorizon != h)
           getHandle.deleteTimer(prevHorizon)

@@ -40,9 +40,8 @@ import org.apache.spark.sql.functions._
   * No UDFs, no higher-order functions: chars come from
   * `regexp_extract_all`, merges from lead/lag/row_number windows — all
   * codegen. Every window partitions by `word` (high cardinality — no
-  * skew ceiling), and each pass ends in a `localCheckpoint` whose
-  * predecessor is unpersisted, so exactly one vocab-sized table stays
-  * pinned during the loop.
+  * skew ceiling), and each pass advances the symbol table through
+  * [[graft.util.Pins.advance]].
   */
 object Bpe {
 
@@ -155,9 +154,7 @@ object Bpe {
       bestPair(syms) match {
         case Some((a, b, pc)) =>
           merges += Merge(rank + 1, a, b, a + b, pc)
-          val next = mergePass(syms, a, b).localCheckpoint(true)
-          graft.util.Pins.release(syms)
-          syms = next
+          syms = graft.util.Pins.advance(syms, mergePass(syms, a, b))
           rank += 1
         case None => exhausted = true
       }
@@ -195,7 +192,7 @@ object Bpe {
       .orderBy(desc("pc"), asc("lhs"), asc("rhs"))
       .limit(limit)
 
-  /** The batched trainer on the ARRAY representation (round 14): the
+  /** The batched trainer on the ARRAY representation: the
     * SAME symbol-disjoint batch selection as before — so accepted
     * counts stay exact and ranks keep the documented one-pass
     * displacement bound — but the symbol table lives as one row per
@@ -252,20 +249,15 @@ object Bpe {
         batch.zipWithIndex.foreach { case ((a, b, pc), i) =>
           merges += Merge(rank + 1 + i, a, b, a + b, pc)
         }
-        val next = tbl.withColumn("syms",
-          MergeBatchApply(col("syms"), batch.toSeq.map(t => (t._1, t._2))))
-          .localCheckpoint(true)
-        graft.util.Pins.release(tbl)
-        tbl = next
+        tbl = graft.util.Pins.advance(tbl, tbl.withColumn("syms",
+          MergeBatchApply(col("syms"), batch.toSeq.map(t => (t._1, t._2)))))
         rank += batch.size
       }
     }
-    // back to the exploded model contract; pin the result, drop the loop table
-    val pinned = tbl.select(col("word"), col("cnt"),
+    // back to the exploded model contract
+    val pinned = graft.util.Pins.advance(tbl, tbl.select(col("word"), col("cnt"),
       posexplode(col("syms")).as(Seq("pos", "sym")))
-      .select(col("word"), col("cnt"), col("pos").cast("int").as("pos"), col("sym"))
-      .localCheckpoint(true)
-    graft.util.Pins.release(tbl)
+      .select(col("word"), col("cnt"), col("pos").cast("int").as("pos"), col("sym")))
     BpeModel(merges.toSeq, pinned, () => graft.util.Pins.release(pinned))
   }
 
@@ -273,26 +265,21 @@ object Bpe {
     * welcome — segmentation needs only the merge list, not the training
     * vocab) by replaying the merges in rank order. Returns
     * (word, pos, sym). `numMerges` window passes over a vocab-sized
-    * table; lineage is cut per pass, and intermediate pins are released
-    * as the loop advances — the FINAL table is returned pinned and owned
-    * by the caller ([[graft.util.Pins.release]] when done — a plain
-    * `unpersist()` cannot drop a checkpoint pin).
+    * table, each advanced through [[graft.util.Pins.advance]]; the
+    * caller owns the returned pin ([[graft.util.Pins.release]] when
+    * done).
     */
   def segmentWords(wordList: DataFrame, merges: Seq[Merge]): DataFrame = {
-    var syms = initialSymbols(
+    val init = initialSymbols(
       wordList.select("word").distinct().withColumn("cnt", lit(1L)))
       .localCheckpoint(true)
-    merges.sortBy(_.merge_rank).foreach { m =>
-      val next = mergePass(syms, m.lhs, m.rhs).localCheckpoint(true)
-      graft.util.Pins.release(syms)
-      syms = next
+    val syms = merges.sortBy(_.merge_rank).foldLeft(init) { (s, m) =>
+      graft.util.Pins.advance(s, mergePass(s, m.lhs, m.rhs))
     }
     // project BEFORE the final checkpoint: the returned frame must BE the
     // pinned scan (not a projection over it), or the caller's
     // Pins.release would see a Project node and miss the pin
-    val out = syms.select("word", "pos", "sym").localCheckpoint(true)
-    graft.util.Pins.release(syms)
-    out
+    graft.util.Pins.advance(syms, syms.select("word", "pos", "sym"))
   }
 
   /** Persist a trained model: the merge list (the portable tokenizer —

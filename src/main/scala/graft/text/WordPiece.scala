@@ -144,9 +144,7 @@ object WordPiece {
       bestScored(syms) match {
         case Some((a, b, pc, sm)) =>
           merges += WpMerge(rank + 1, a, b, a + b, sm, pc)
-          val next = Bpe.mergePass(syms, a, b).localCheckpoint(true)
-          graft.util.Pins.release(syms)
-          syms = next
+          syms = graft.util.Pins.advance(syms, Bpe.mergePass(syms, a, b))
           rank += 1
         case None => exhausted = true
       }
@@ -213,12 +211,9 @@ object WordPiece {
           merges += WpMerge(rank + 1 + i, r.getString(0), r.getString(1),
             r.getString(0) + r.getString(1), r.getLong(3), r.getLong(2))
         }
-        val next = tbl.withColumn("syms",
+        tbl = graft.util.Pins.advance(tbl, tbl.withColumn("syms",
           MergeBatchApply(col("syms"),
-            batch.toSeq.map(r => (r.getString(0), r.getString(1)))))
-          .localCheckpoint(true)
-        graft.util.Pins.release(tbl)
-        tbl = next
+            batch.toSeq.map(r => (r.getString(0), r.getString(1))))))
         rank += batch.length
       }
     }
@@ -235,12 +230,9 @@ object WordPiece {
     */
   def segmentWords(wordList: DataFrame, model: WpModel,
                    mark: Boolean = true): DataFrame =
-    // NOTE (round 19): an explicit session-width repartition under the
-    // distinct was tried here (the Multimodal.spreadIds pattern, to
-    // spread the longest-match DP off AQE's 1-task byte-coalesced
-    // layout) and REVERTED on measurement: the DP is allocation-heavy,
-    // and 32-wide it lost more to GC than it gained in parallelism
-    // (0.87 s vs 0.77 s at sf0.1). AQE's byte-based sizing stays.
+    // no session-width repartition under the distinct: the DP is
+    // allocation-heavy, and spread 32-wide it lost more to GC than it
+    // gained (0.87 s vs 0.77 s at sf0.1); AQE's byte-based sizing stays.
     wordList.select("word").distinct()
       .withColumn("pieces", WordPieceSplit.split(col("word"), model.pieces, mark))
 

@@ -3,7 +3,8 @@ package graft.util
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Actually release a `localCheckpoint` pin.
+/** Actually release a `localCheckpoint` pin, and the one loop-state
+  * cadence every checkpointed driver loop advances through.
   *
   * `Dataset.unpersist()` routes through the CacheManager and only drops
   * entries registered by `cache()`/`persist()`. A `localCheckpoint` pins
@@ -17,6 +18,16 @@ import org.apache.spark.sql.execution.LogicalRDD
   * services (streaming dedup, model serving) that rely on
   * checkpoint-then-release to bound executor storage, so every
   * checkpoint release in the engine routes through here.
+  *
+  * Loop-state contract: a loop whose state is a table holds exactly one
+  * state pin at a time. [[advance]] materializes the successor before it
+  * drops the predecessor the successor's plan reads (a released
+  * `localCheckpoint` cannot recompute), and the caller owns the pin it
+  * returns. [[iterate]] runs a fixed-count loop whose last step stays a
+  * live plan — callers and the PLANS.md audit see the real per-step
+  * shape, not a checkpoint scan — so the caller owns the last state
+  * checkpoint (or `init`, when n ≤ 1) that plan reads, along with
+  * whatever loop-invariant pins the step closes over.
   */
 object Pins {
 
@@ -27,5 +38,25 @@ object Pins {
   def release(ds: Dataset[_]): Unit = ds.queryExecution.analyzed match {
     case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
     case _              => ds.unpersist(); ()
+  }
+
+  /** Checkpoint `next` eagerly, then release `prev`; returns the pinned
+    * `next`, which the caller now owns.
+    */
+  def advance[T](prev: Dataset[_], next: Dataset[T]): Dataset[T] = {
+    val pinned = next.localCheckpoint(true)
+    release(prev)
+    pinned
+  }
+
+  /** `n` applications of `step` from `init`: steps 1..n−1 each
+    * [[advance]] the state (so `init` itself is released once step 1
+    * has materialized, when n ≥ 2), step n stays a live plan over the
+    * last checkpoint. `n = 0` returns `init`.
+    */
+  def iterate[T](init: Dataset[T], n: Int)(step: Dataset[T] => Dataset[T]): Dataset[T] = {
+    var state = init
+    for (_ <- 1 until n) state = advance(state, step(state))
+    if (n > 0) step(state) else state
   }
 }

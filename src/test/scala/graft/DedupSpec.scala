@@ -192,6 +192,22 @@ class DedupSpec extends AnyFunSuite {
     assert(local.values.toSet == Set(1L), "one chain -> one component rooted at 1")
   }
 
+  test("connected components: the distributed loop leaves only its result pin") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val nodes = (1L to 7L).toDF("id")
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L)).toDF("a", "b")
+    val before = sc.getPersistentRDDs.keySet
+    val out = graft.dedup.Dedup
+      .connectedComponents(nodes, "id", pairs, "a", "b", localThreshold = 0L)
+    val added = sc.getPersistentRDDs.keySet -- before
+    val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    graft.util.Pins.release(out)
+    assert(added.size == 1, s"distributed components left ${added.size} pins")
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      5L -> 5L, 6L -> 5L, 7L -> 7L))
+  }
+
   test("signature-contracted components equal the raw pair-graph closure (dup-heavy + empty docs)") {
     import spark.implicits._
     // 3 copies of text A (ids 1,2,3), 2 copies of B (4,5) where B chains to

@@ -266,4 +266,29 @@ class GraphOpsSpec extends AnyFunSuite {
     val sum = rows.map(_.getDouble(1)).sum
     assert(math.abs(sum - 1.0) < 1e-3) // pr rounded to 6dp in the query
   }
+
+  test("loop pins: the returned plan holds the same pins at 1, 2 and 5 iterations") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val es = edges(Seq((1, 2, 1L), (2, 3, 2L), (3, 1, 1L), (3, 4, 1L), (4, 5, 1L)))
+    val seeds = Seq(1).toDF("node")
+    // pins the returned plan reads: trans + last rank state; sym + last
+    // labels; the last edge set
+    val loops: Seq[(String, Int, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      ("pageRank", 2, n => GraphOps.pageRank(es, "src", "dst", "w", n, 0.85)),
+      ("personalizedPageRank", 2, n => GraphOps.personalizedPageRank(
+        es, "src", "dst", "w", seeds, "node", n, 0.85)),
+      ("labelPropagation", 2, n => GraphOps.labelPropagation(es, "src", "dst", "w", n)),
+      ("kCore", 1, n => GraphOps.kCore(es, "src", "dst", 2, n)))
+    loops.foreach { case (name, held, run) =>
+      Seq(1, 2, 5).foreach { n =>
+        val before = sc.getPersistentRDDs.keySet
+        val out = run(n)
+        if (n == 5) out.collect() // every pin the plan reads is still live
+        val added = sc.getPersistentRDDs.keySet -- before
+        added.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+        assert(added.size == held, s"$name at n=$n left ${added.size} pins, want $held")
+      }
+    }
+  }
 }

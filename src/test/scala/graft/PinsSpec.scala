@@ -26,4 +26,50 @@ class PinsSpec extends AnyFunSuite {
     graft.util.Pins.release(df)
     assert(!df.storageLevel.useMemory, "cached plan must uncache via the fallback")
   }
+
+  private def pinIds() = spark.sparkContext.getPersistentRDDs.keySet
+  private def isPinned(ds: org.apache.spark.sql.Dataset[_]) = ds.queryExecution.analyzed match {
+    case lr: org.apache.spark.sql.execution.LogicalRDD =>
+      spark.sparkContext.getPersistentRDDs.contains(lr.rdd.id)
+    case _ => false
+  }
+
+  test("Pins.iterate: n = 0 returns init, n = 1 is a live plan over init") {
+    val init = (1 to 10).toDF("x").localCheckpoint(true)
+    var calls = 0
+    def step(df: org.apache.spark.sql.DataFrame) = { calls += 1; df.select(($"x" + 1).as("x")) }
+    assert(graft.util.Pins.iterate(init, 0)(step) eq init)
+    assert(calls == 0)
+    val before = pinIds()
+    val one = graft.util.Pins.iterate(init, 1)(step)
+    assert(calls == 1)
+    assert(pinIds() == before, "n = 1 must checkpoint nothing")
+    assert(!isPinned(one) && isPinned(init), "n = 1 is a live plan and init stays pinned")
+    assert(one.as[Int].collect().sorted.toSeq == (2 to 11))
+    graft.util.Pins.release(init)
+  }
+
+  test("Pins.iterate: n = 3 calls step three times and leaves one loop pin") {
+    val before = pinIds()
+    val init = (1 to 10).toDF("x").localCheckpoint(true)
+    var calls = 0
+    val out = graft.util.Pins.iterate(init, 3) { df =>
+      calls += 1; df.select(($"x" * 2).as("x"))
+    }
+    assert(calls == 3)
+    val added = pinIds() -- before
+    assert(added.size == 1, s"want only the step-2 state pinned, got $added")
+    assert(!isPinned(init), "init is released once step 1 has materialized")
+    assert(out.as[Int].collect().sorted.toSeq == (1 to 10).map(_ * 8))
+    added.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(false))
+  }
+
+  test("Pins.advance: a successor that reads its predecessor collects after the release") {
+    val prev = (1 to 10).toDF("x").localCheckpoint(true)
+    val next = graft.util.Pins.advance(prev, prev.select(($"x" * 3).as("x")))
+    assert(!isPinned(prev), "advance must release the predecessor")
+    assert(isPinned(next), "advance must return the pinned successor")
+    assert(next.as[Int].collect().sorted.toSeq == (1 to 10).map(_ * 3))
+    graft.util.Pins.release(next)
+  }
 }
