@@ -163,13 +163,4 @@ object BbcTasks {
       maxIter = iters, tol = 0.0, distanceMeasure = "cosine",
       initCenters = Some(seeded.clusterCenters))
   }
-
-  /** Convenience: full 1.1→1.4 chain reading the fixture files. */
-  def tfidfFromCorpus(spark: SparkSession, corpusDir: String, termsPath: String,
-                      docsPath: String, stopPath: String): DataFrame = {
-    val counts = countMatrix(spark, corpusDir, termsPath, docsPath, stopPath)
-    val filtered = corpusFreqFilter(counts)
-    val totalDocs = Dict.load(spark, docsPath, "doc_id", "doc_name").count()
-    tfidf(filtered, totalDocs)
-  }
 }

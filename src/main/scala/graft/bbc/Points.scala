@@ -31,7 +31,10 @@ object Points {
   /** The task 2.1 run: points → features vector → explicit Lloyd loop
     * (per-iteration artifacts, convergence at `tol`). Row id = (x, y)
     * insertion is not stable in the reference either; we use a
-    * deterministic synthetic id ordered by (x, y).
+    * deterministic synthetic id ordered by (x, y). The loop caches x and
+    * y with the features, so the iteration hook sees the reference's
+    * per-iteration snapshot shape, (cluster, x, y), straight off the
+    * assignments.
     */
   def kmeans2D(spark: SparkSession, points: DataFrame, k: Int = 3,
                maxIter: Int = 20, tol: Double = 1e-5,
@@ -42,22 +45,14 @@ object Points {
       .withColumn("pid",
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy("x", "y")))
-    // the iteration hook sees (cluster, x, y) rows — the reference's
-    // per-iteration snapshot shape — by joining coordinates back on pid
     Clustering.lloydLoop(spark, feats, "pid", k, maxIter, tol,
-      onIteration = onIteration.map(f => (i: Int, asg: org.apache.spark.sql.DataFrame) =>
-        f(i, feats.select("pid", "x", "y")
-          .join(asg.select("pid", "cluster"), "pid")
-          .select(col("cluster"), col("x"), col("y")))))
+      onIteration = onIteration.map(f => (i: Int, asg: DataFrame) =>
+        f(i, asg.select("cluster", "x", "y"))))
   }
 
-  /** `.classes` rows in the 2.1 golden format: `cluster,x,y`. */
-  def classesRows(points: DataFrame, result: LloydResult): DataFrame = {
-    val feats = points
-      .withColumn("pid",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy("x", "y")))
-    feats.join(result.assignments.select("pid", "cluster"), "pid")
-      .select(col("cluster"), col("x"), col("y"))
-  }
+  /** `.classes` rows in the 2.1 golden format: `cluster,x,y`, read off
+    * the final assignments (which carry x and y). `points` is unused.
+    */
+  def classesRows(points: DataFrame, result: LloydResult): DataFrame =
+    result.assignments.select("cluster", "x", "y")
 }

@@ -1,11 +1,12 @@
 package graft.cluster
 
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
-import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.{SparseVector, Vector, Vectors}
 import org.apache.spark.ml.stat.Summarizer
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.CenterKernels
 
 /** K-Means clustering layer (reference tasks 2.1/2.2/2.3, SURVEY §2.7).
   *
@@ -65,7 +66,7 @@ object Clustering {
     * the final centers/assignments.
     */
   final case class LloydResult(
-      assignments: DataFrame,               // (id cols..., cluster)
+      assignments: DataFrame,               // (the caller's columns..., cluster)
       centers: Array[Vector],
       losses: Seq[(Int, Int, Double)],      // (iteration, cluster, wcss)
       iterations: Int)
@@ -95,19 +96,20 @@ object Clustering {
     require(distanceMeasure == "euclidean" || distanceMeasure == "cosine",
       s"unknown distanceMeasure $distanceMeasure")
     val cosineMode = distanceMeasure == "cosine"
-    def vdot(a: Vector, b: Vector): Double = {
-      // sparse-aware: iterate the active entries of `a` (the doc vector),
-      // point-lookup into `b` (the centroid, dense after the first mean)
-      var s = 0.0
-      a.foreachActive((i, av) => s += av * b(i))
-      s
-    }
-    def dist(v: Vector, c: Vector): Double =
+    // all the caller's columns ride the cache (task 2.1 reads x/y off the
+    // assignments); a projection, not `data`, so the cache stays the
+    // loop's own: caching `data`'s plan would move every other reader of
+    // a shared frame (the ml_* memoized features, MLlib's persist check)
+    // onto it
+    val cached = data.select("*").cache()
+    // center-to-center movement in the mode's metric, for `moved` below
+    def displacement(a: Vector, b: Vector): Double =
       if (cosineMode) {
-        val nn = Vectors.norm(v, 2) * Vectors.norm(c, 2)
-        if (nn == 0) 1.0 else 1.0 - vdot(v, c) / nn
-      } else Vectors.sqdist(v, c)
-    val cached = data.select(col(idCol), col("features")).cache()
+        val nn = Vectors.norm(a, 2) * Vectors.norm(b, 2)
+        var dot = 0.0
+        a.foreachActive((i, av) => dot += av * b(i))
+        if (nn == 0) 1.0 else 1.0 - dot / nn
+      } else math.sqrt(Vectors.sqdist(a, b))
     // seedable: a caller may hand in centers (e.g. a k-means|| seeding —
     // task 2.3's structure: the same loop as 2.2, different init);
     // default stays the deterministic first-k-by-id
@@ -121,23 +123,20 @@ object Clustering {
     var moved = Double.MaxValue
     var assignments: DataFrame = null
     while (iter < maxIter && moved > tol) {
-      // codegen kernels, not UDFs: the argmin and the to-assigned-center
-      // distance read the VectorUDT storage struct inside whole-stage
-      // codegen (sparse-aware — O(nnz) in cosine mode), with the k
-      // centers shipped once per stage as plan reference objects. Same
-      // math, same accumulation order, same tie rule as the driver-side
-      // dist() above — the swap is bit-compatible with the 2.1 goldens.
+      // codegen kernels, not UDFs (see CenterKernels): the argmin and
+      // the to-assigned-center distance run inside whole-stage codegen,
+      // sparse-aware, with the k centers shipped once per stage
       val cArr = centers.map(_.toArray)
       assignments = cached.withColumn("cluster",
-        graft.functions.CenterKernels.nearestCenter(col("features"), cArr, cosineMode))
+        CenterKernels.nearestCenter(col("features"), cArr, cosineMode))
       // per-iteration artifact hook (the reference's iter_N snapshot
       // dirs, task 2.1): receives the 0-based iteration and the
       // assignments AGAINST THE ENTERING CENTERS, exactly what the
       // reference's per-iteration reducer output holds
       onIteration.foreach(f => f(iter, assignments))
       val stats = assignments
-        .withColumn("sqdist", graft.functions.CenterKernels
-          .centerDistance(col("features"), col("cluster"), cArr, cosineMode))
+        .withColumn("sqdist",
+          CenterKernels.centerDistance(col("features"), col("cluster"), cArr, cosineMode))
         .groupBy("cluster")
         .agg(Summarizer.mean(col("features")).as("mean"),
           count(lit(1)).as("n"), sum("sqdist").as("wcss"))
@@ -151,17 +150,26 @@ object Clustering {
       // still rotating), so `moved` is the ANGULAR displacement, the same
       // 1 - cos(old, new) the assignment distance uses; tol then has one
       // meaning in both modes (max center movement in the mode's metric).
-      moved = centers.zip(newCenters)
-        .map { case (a, b) =>
-          if (cosineMode) {
-            val nn = Vectors.norm(a, 2) * Vectors.norm(b, 2)
-            if (nn == 0) 1.0 else 1.0 - vdot(a, b) / nn
-          } else math.sqrt(Vectors.sqdist(a, b))
-        }.max
+      moved = centers.zip(newCenters).map { case (a, b) => displacement(a, b) }.max
       centers = newCenters
       iter += 1
     }
     LloydResult(assignments, centers, losses.toSeq, iter)
+  }
+
+  /** The nearest-center invariant as an int flag column: 1 iff the
+    * distance of `features` to its `assigned` center (an int index into
+    * `centers`) is, within FP epsilon, the minimum over all centers.
+    * Both distances come from the [[CenterKernels]] the Lloyd loop
+    * assigns with, so a fit is checked under the loop's own distance.
+    */
+  def isNearest(features: Column, assigned: Column, centers: Array[Vector],
+                cosine: Boolean): Column = {
+    val cArr = centers.map(_.toArray)
+    val dMin = CenterKernels.centerDistance(features,
+      CenterKernels.nearestCenter(features, cArr, cosine), cArr, cosine)
+    val dAssigned = CenterKernels.centerDistance(features, assigned, cArr, cosine)
+    (dAssigned <= dMin + lit(1e-9) * (dMin + lit(1.0))).cast("int")
   }
 
   /** Top-n components of each center (A12 semantics, tie-safe: ordered by

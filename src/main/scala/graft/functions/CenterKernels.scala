@@ -9,29 +9,37 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Codegen nearest-centroid kernels over MLlib `Vector` columns — the
-  * no-UDF form of the Lloyd-loop hot path ([[graft.cluster.Clustering
-  * .lloydLoop]]).
+  * one definition of "distance to a center" in the engine: the distance
+  * formula, the cosine `nn == 0 → 1.0` guard and the first-of-tied tie
+  * rule live here and nowhere else. Callers:
+  *  - [[graft.cluster.Clustering.lloydLoop]] assigns each row with
+  *    `nearestCenter` and sums its per-cluster loss with
+  *    `centerDistance` (tasks 2.1–2.3, `ml_lloyd_losses`);
+  *  - [[graft.cluster.Clustering.isNearest]] checks a fitted model's
+  *    assignments against both (the `ml_kmeans_assign` and
+  *    `ml_doc_clusters` nearest-center invariants).
   *
-  * The UDF form these replace deserializes every row's vector into a JVM
-  * `Vector` object per evaluation (serialization-boxed, per row × per
-  * center). These expressions instead read the `VectorUDT` STORAGE struct
-  * (`type: tinyint, size: int, indices: array<int>, values: array<double>`)
-  * directly inside whole-stage codegen — no UDT deserialization, no object
-  * allocation — and are sparse-aware: a sparse row costs O(nnz) for the
-  * dot/cosine path, so high-dimensional TF-IDF vectors never densify.
+  * The expressions read the `VectorUDT` STORAGE struct (`type: tinyint,
+  * size: int, indices: array<int>, values: array<double>`) directly
+  * inside whole-stage codegen — no UDT deserialization, no per-row
+  * object allocation — and are sparse-aware: a sparse row costs O(nnz)
+  * for the dot/cosine path, so high-dimensional TF-IDF vectors never
+  * densify.
   *
   * The k centers ride as a plan reference object (`ctx.addReferenceObj`),
-  * shipped once per stage with the task binary — the same distribution
-  * cost as the broadcast the UDF form used, without the per-row closure.
+  * shipped once per stage with the task binary — the distribution cost
+  * of a broadcast without the per-row closure.
   *
-  * Distance semantics match the Lloyd loop's driver-side math exactly
-  * (same accumulation order, same `nn == 0 → 1.0` cosine guard), so the
-  * swap is bit-compatible with the golden task-2.1 artifacts.
+  * Euclidean mode is the direct Σ(vᵢ − cᵢ)² sum in `Vectors.sqdist`'s
+  * order (bit-compatible with the golden task-2.1 artifacts), not the
+  * expansion ‖v‖² − 2v·c + ‖c‖², whose cancellation near a centroid can
+  * flip a near-tie. Cosine mode accumulates in the order of
+  * `foreachActive` + `Vectors.norm(v, 2)`.
   */
 object CenterKernels {
 
   /** Index (0-based) of the nearest center under the mode's distance;
-    * strict `<` keeps the first of tied centers — the UDF's tie rule.
+    * strict `<` keeps the first of tied centers.
     */
   def nearest(row: InternalRow, centers: Array[Array[Double]],
               norms: Array[Double], cosine: Boolean): Int = {

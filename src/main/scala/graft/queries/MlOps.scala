@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
@@ -74,41 +74,6 @@ object MlOps {
       tfidf.unpersist(); vocab.unpersist()
       compact
     }
-
-  /** Per-row nearest-center invariant over a fitted model's assignments:
-    * emits `(idCol, is_nearest)` where `is_nearest = 1` iff the row's
-    * distance to its ASSIGNED center is (within FP epsilon) the minimum
-    * over all centers. The seeded fit itself is not SQL-expressible, but
-    * this invariant is — the oracle predicts `1` for every row, so the
-    * driver hash check now validates the clustering semantics, not just
-    * a row count. `distFn(vecArray, centerArray) -> distance Column`.
-    */
-  private def nearestCenterFlags(assigned: DataFrame, idCol: String,
-                                 centers: Array[Array[Double]],
-                                 distFn: (Column, Column) => Column): DataFrame = {
-    import org.apache.spark.ml.functions.vector_to_array
-    val withArr = assigned.withColumn("__arr", vector_to_array(col("features")))
-    val dists = centers.map(c => distFn(col("__arr"), array(c.map(lit).toSeq: _*)))
-    withArr
-      .withColumn("__dists", array(dists.toSeq: _*))
-      .withColumn("__dmin", array_min(col("__dists")))
-      .withColumn("__dassigned", element_at(col("__dists"), col("prediction") + 1))
-      .select(col(idCol),
-        (col("__dassigned") <= col("__dmin") + lit(1e-9) * (col("__dmin") + lit(1.0)))
-          .cast("int").as("is_nearest"))
-  }
-
-  /** ‖a−c‖² via the codegen `vec_sqdist` kernel — a single Σ(xᵢ−yᵢ)²
-    * loop per pair. The algebraic expansion a·a − 2·a·c + ‖c‖² looks
-    * cheaper (a·a subexpression-eliminated across the k centers) but
-    * suffers catastrophic cancellation for vectors near a centroid —
-    * the difference of two large dot products can even go slightly
-    * negative — and a near-tie between two centers can then flip
-    * `is_nearest` versus the oracle's direct Σ(x−y)². The direct kernel
-    * keeps the single-pass codegen win without the cancellation.
-    */
-  private def sqDist(a: Column, b: Column): Column =
-    graft.functions.VectorExprs.sqdist(a, b)
 
   /** Build-once PCA model over `embeddings` (k = 5 of 64, seedless —
     * the fit is one deterministic Gramian pass + a driver-side
@@ -210,8 +175,8 @@ object MlOps {
     "ml_kmeans_assign" -> ((s, d) => {
       val feats = embFeatures(s, d)
       val model = Clustering.fitKMeans(feats, k = 5, maxIter = 10, seed = 42L)
-      nearestCenterFlags(model.transform(feats), "vec_id",
-        model.clusterCenters.map(_.toArray), sqDist)
+      model.transform(feats).select(col("vec_id"), Clustering.isNearest(col("features"),
+        col("prediction"), model.clusterCenters, cosine = false).as("is_nearest"))
     }),
 
     // A10-adjacent (cosine path), declared as the structural contract the
@@ -256,26 +221,11 @@ object MlOps {
       // (BbcTasks.docKMeansScalable)
       val model = Clustering.fitKMeans(compact, k = 5, maxIter = 10, seed = 42L,
         initMode = "random", distanceMeasure = "cosine")
-      // centers here are vocabulary-dimensional (~10^4 components): as
-      // array literals they would blow up the expression tree, so the
-      // check rides a broadcast of the k x dim model state and a
-      // sparse-aware dot (O(nnz * k) per row, distributed, no collect
-      // of the data) — the same shape lloydLoop's assignment uses.
-      val bcCenters = s.sparkContext.broadcast(model.clusterCenters)
-      val isNearest = udf { (v: org.apache.spark.ml.linalg.Vector, pred: Int) =>
-        val cs = bcCenters.value
-        val vn = org.apache.spark.ml.linalg.Vectors.norm(v, 2)
-        val ds = cs.map { c =>
-          var dot = 0.0
-          v.foreachActive((i, x) => dot += x * c(i))
-          val nn = vn * org.apache.spark.ml.linalg.Vectors.norm(c, 2)
-          if (nn == 0) 1.0 else 1.0 - dot / nn
-        }
-        val dmin = ds.min
-        if (ds(pred) <= dmin + 1e-9 * (dmin + 1.0)) 1 else 0
-      }
-      model.transform(compact)
-        .select(col("doc_id"), isNearest(col("features"), col("prediction")).as("is_nearest"))
+      // vocabulary-dimensional centers (~10^4 components) ride the
+      // kernels as plan reference objects, not array literals, and the
+      // cosine distance stays sparse-aware (O(nnz · k) per row)
+      model.transform(compact).select(col("doc_id"), Clustering.isNearest(col("features"),
+        col("prediction"), model.clusterCenters, cosine = true).as("is_nearest"))
     }),
 
     // Model-based quality filtering (the fastText-linear shape used for

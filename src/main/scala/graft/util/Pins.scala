@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, classic}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Actually release a `localCheckpoint` pin, and the one loop-state
@@ -41,12 +41,30 @@ object Pins {
   }
 
   /** Checkpoint `next` eagerly, then release `prev`; returns the pinned
-    * `next`, which the caller now owns.
+    * `next`, which the caller now owns. The pin's size estimate is
+    * capped at `Long.MaxValue` bytes: a checkpoint carries its plan's
+    * estimate as origin stats, so a step that joins its state with
+    * itself multiplies the estimate every round, into BigInts with
+    * exponentially many digits that stall the driver in Catalyst's
+    * stats arithmetic. `Long.MaxValue` is what Spark assumes for a
+    * relation it knows nothing about, above every join-selection
+    * threshold, so the cap moves no plan decision.
     */
   def advance[T](prev: Dataset[_], next: Dataset[T]): Dataset[T] = {
-    val pinned = next.localCheckpoint(true)
+    val pinned = capSize(next.localCheckpoint(true))
     release(prev)
     pinned
+  }
+
+  private val MaxSize = BigInt(Long.MaxValue)
+
+  private def capSize[T](ds: Dataset[T]): Dataset[T] = ds.queryExecution.analyzed match {
+    case lr: LogicalRDD if lr.stats.sizeInBytes > MaxSize =>
+      val session = ds.asInstanceOf[classic.Dataset[T]].sparkSession
+      new classic.Dataset[T](session,
+        lr.copy()(session, Some(lr.stats.copy(sizeInBytes = MaxSize)), Some(lr.constraints)),
+        ds.encoder)
+    case _ => ds
   }
 
   /** `n` applications of `step` from `init`: steps 1..n−1 each

@@ -84,6 +84,31 @@ class ClusteringSpec extends AnyFunSuite {
     }
   }
 
+  test("isNearest flags a wrong assignment 0 and the rest 1, euclidean and cosine") {
+    def flags(df: org.apache.spark.sql.DataFrame, centers: Array[Vector], cosine: Boolean) =
+      df.select($"id", Clustering.isNearest($"features", $"assigned", centers, cosine))
+        .as[(Long, Int)].collect().toMap
+    // euclidean: the far point 7 belongs to center 2, not center 0
+    val euCenters = Array(Vectors.dense(0.0, 0.0), Vectors.dense(10.0, 10.0),
+      Vectors.dense(-50.0, 40.0))
+    val eu = points.withColumn("assigned",
+      when($"id" === 7L, 0).when($"id" >= 4L, 1).otherwise(0))
+    assert(flags(eu, euCenters, cosine = false) ==
+      (1L to 7L).map(i => i -> (if (i == 7L) 0 else 1)).toMap)
+    // cosine over sparse rows: doc 3 points mostly along axis 0, not 1;
+    // the all-zero doc 4 is 1.0 from every center (the nn == 0 guard), so
+    // any assignment is nearest
+    val cosCenters = Array(Vectors.dense(1.0, 0.0, 0.0), Vectors.dense(0.0, 1.0, 0.0),
+      Vectors.dense(0.0, 0.0, 1.0))
+    val docs = Seq(
+      (1L, Vectors.sparse(3, Array(0), Array(2.0)), 0),
+      (2L, Vectors.sparse(3, Array(1, 2), Array(1.0, 5.0)), 2),
+      (3L, Vectors.sparse(3, Array(0, 1), Array(3.0, 1.0)), 1),
+      (4L, Vectors.sparse(3, Array.empty[Int], Array.empty[Double]), 1)
+    ).toDF("id", "features", "assigned")
+    assert(flags(docs, cosCenters, cosine = true) == Map(1L -> 1, 2L -> 1, 3L -> 0, 4L -> 1))
+  }
+
   test("topComponents keeps ties (no TreeMap collapse) and orders by value") {
     val centers = Array(Vectors.dense(5.0, 5.0, 1.0, 9.0))
     val top = Clustering.topComponents(centers, 3)

@@ -72,4 +72,21 @@ class PinsSpec extends AnyFunSuite {
     assert(next.as[Int].collect().sorted.toSeq == (1 to 10).map(_ * 3))
     graft.util.Pins.release(next)
   }
+
+  test("Pins.advance caps the pin's size estimate: a self-joining state stays at Long.MaxValue") {
+    // each round's plan joins the state with itself, so its estimate is
+    // the square of the last checkpoint's; uncapped it passes Long.MaxValue
+    // by round 4 and has hundreds of digits by round 8
+    val before = pinIds()
+    var state = (1 to 10).toDF("x").localCheckpoint(true)
+    for (_ <- 1 to 8)
+      state = graft.util.Pins.advance(state, state.as("a")
+        .join(state.as("b"), $"a.x" === $"b.x").select($"a.x".as("x")))
+    val size = state.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size <= BigInt(Long.MaxValue), s"a ${size.toString.length}-digit size estimate")
+    assert(isPinned(state), "the capped state must still be the pinned checkpoint")
+    assert(state.as[Int].collect().sorted.toSeq == (1 to 10))
+    graft.util.Pins.release(state)
+    assert(pinIds() == before, "advance must leave only the caller's pin")
+  }
 }

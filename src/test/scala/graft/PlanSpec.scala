@@ -358,12 +358,22 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains(">= 0.2"), s"threshold filter missing:\n$p")
   }
 
-  test("kmeans-assign distances ride the codegen vec_sqdist kernel") {
+  test("kmeans-assign distances ride the codegen center_distance kernel") {
     val p = plan("ml_kmeans_assign")
-    // the direct Σ(x−y)² kernel, not the cancellation-prone algebraic
-    // expansion over vec_dot (a·a − 2a·c + ‖c‖²)
-    assert(p.contains("vec_sqdist"), s"expected native sqdist kernel:\n$p")
+    // the Lloyd loop's direct Σ(x−y)² kernel, not the cancellation-prone
+    // algebraic expansion over vec_dot (a·a − 2a·c + ‖c‖²)
+    assert(p.contains("center_distance"), s"expected the center_distance kernel:\n$p")
     assert(!p.contains("zip_with"), s"HOF sqdist survived:\n$p")
+  }
+
+  test("doc-clusters' nearest-center flag is UDF-free (the kernels, no broadcast UDF)") {
+    // MLlib's KMeansModel.transform computes `prediction` with its own
+    // one-argument UDF over the features; the flag itself must add none
+    val udfs = SparkEntry.queries("ml_doc_clusters")(spark, SparkTestSession.sfDir)
+      .queryExecution.sparkPlan.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u })
+    assert(udfs.forall(_.children.size == 1),
+      s"a multi-argument UDF computes the flag: ${udfs.mkString("; ")}")
   }
 
   test("IVFPQ probe joins on keys at every stage — no cartesian, no corpus broadcast") {
